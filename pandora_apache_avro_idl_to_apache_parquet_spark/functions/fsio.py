@@ -22,8 +22,9 @@ Atomicity model (two modes, picked per filesystem):
   marker, and downstream readers trust only files referenced by the commit
   log. Exclusive-create degrades to check-then-write — the same conditional
   semantics real Delta LogStores implement per store (S3 conditional PUT,
-  ABFS ETags); a lost race re-reads the log and retries, so duplicates still
-  cannot be committed.
+  ABFS ETags); a lost race re-checks the entries committed since the
+  commit's read version before it retries (``append_log_entry``), so a
+  conflicting commit still cannot land.
 """
 
 from __future__ import annotations
@@ -163,8 +164,8 @@ class FsIO:
         The commit log's optimistic lock (the reference's
         upload-with-overwrite=false). Local: kernel-atomic ``O_EXCL``.
         Elsewhere: check-then-write (per-store conditional-PUT semantics are a
-        deployment concern; the caller's re-read-and-retry loop keeps the
-        exactly-once invariant either way)."""
+        deployment concern; ``append_log_entry`` re-checks every entry
+        committed since its read version before each attempt either way)."""
         if self.local_excl:
             try:
                 fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)

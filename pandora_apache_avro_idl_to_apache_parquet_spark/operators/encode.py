@@ -34,9 +34,12 @@ Scale notes (the 100 TB story):
 
 from __future__ import annotations
 
+import functools
 import json
 import posixpath
 import uuid
+from collections.abc import Iterator
+from dataclasses import dataclass, field
 from datetime import date
 
 import numpy as np
@@ -334,173 +337,267 @@ def encode_tokens_scan(df: DataFrame, out_dir: str,
 
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 1, "payloadFormat": 2}
 
+_LAST_CHECKPOINT = "_last_checkpoint"
+
+
+class CommitConflict(RuntimeError):
+    """An optimistic commit lost its race: an entry committed after the
+    version the commit was planned from touches what the plan read (the
+    rule is in :func:`append_log_entry`). Nothing was committed; files the
+    loser already published are orphans that :func:`vacuum` reclaims."""
+
+
+class LogTruncated(ValueError):
+    """The requested log versions were collapsed into a checkpoint taken
+    with ``clean=True``: their JSON files no longer exist."""
+
+
+@dataclass
+class LogSnapshot:
+    """Table state folded from a replay of the commit log.
+
+    ``adds`` maps every live data file to its add record; ``removes`` keeps
+    the remove tombstones (a removed file's rows live on elsewhere, so it is
+    never re-added); ``txns`` holds the latest txn per appId; ``dvs`` the
+    live deletion-vector actions, each stamped with ``"v"``, its original
+    commit version, so identity survives checkpoints. ``version`` is the
+    newest version folded (-1 for an empty log): the read version a mutator
+    plans from and hands to :func:`append_log_entry`."""
+
+    version: int = -1
+    adds: dict[str, dict] = field(default_factory=dict)
+    removes: dict[str, dict] = field(default_factory=dict)
+    meta: dict | None = None
+    txns: dict[str, dict] = field(default_factory=dict)
+    dvs: list[dict] = field(default_factory=list)
+
+    @property
+    def files(self) -> list[str]:
+        return sorted(self.adds)
+
+    def apply(self, version: int, entry: dict) -> None:
+        self.version = max(self.version, version)
+        if "add" in entry:
+            self.adds[entry["add"]["path"]] = entry["add"]
+            self.removes.pop(entry["add"]["path"], None)
+        if "remove" in entry:
+            self.removes[entry["remove"]["path"]] = entry["remove"]
+            self.adds.pop(entry["remove"]["path"], None)
+        if "metaData" in entry:
+            self.meta = entry["metaData"]
+        if "txn" in entry:
+            self.txns[entry["txn"]["appId"]] = entry["txn"]
+        if "dv" in entry:
+            self.dvs.append(dict(entry["dv"], v=entry["dv"].get("v", version)))
+        if "dvRestore" in entry:
+            # restore REPLACES the DV state with the target version's exact
+            # live set, so restores compose in both directions
+            self.dvs = [dict(a) for a in entry["dvRestore"]["keep"]]
+
+
+class CommitLog:
+    """The commit log's one reader: a single listing of ``_log/`` and a
+    replay of the latest checkpoint plus the JSON files after it. Every
+    read of the log in the package goes through here.
+
+    The log is a numbered-JSONL Delta ``_delta_log`` analog
+    (``DeltaLake.fs:176-444``): ``<%020d>.json`` files of one action per
+    line (``protocol``, ``metaData``, ``add``, ``remove``, ``txn``, ``dv``,
+    ``dvRestore``), plus optional ``<V>.checkpoint.parquet`` snapshots
+    named by a ``_last_checkpoint`` pointer (:func:`checkpoint_log`)."""
+
+    def __init__(self, io: FsIO):
+        self.io = io
+        self.dir = io.join("_log")
+        self.exists = io.isdir(self.dir)
+        names = io.listdir(self.dir) if self.exists else []
+        self.versions = sorted(int(f[:-5]) for f in names if f.endswith(".json"))
+        self._has_pointer = _LAST_CHECKPOINT in names
+
+    @functools.cached_property
+    def _pointer(self) -> dict | None:
+        if not self._has_pointer:
+            return None
+        return json.loads(self.io.read_text(
+            posixpath.join(self.dir, _LAST_CHECKPOINT)))
+
+    @property
+    def checkpoint(self) -> int | None:
+        """Version of the latest checkpoint; None when never checkpointed."""
+        return None if self._pointer is None else int(self._pointer["version"])
+
+    @property
+    def version(self) -> int:
+        """Newest committed version; -1 for an empty log. A checkpoint
+        always sits at or below the newest JSON file, so the pointer is read
+        only once every JSON file was cleaned."""
+        if self.versions:
+            return self.versions[-1]
+        return -1 if self.checkpoint is None else self.checkpoint
+
+    def checkpoint_entries(self) -> list[dict]:
+        import pyarrow.parquet as pq
+
+        tbl = pq.read_table(pa.BufferReader(self.io.read_bytes(
+            posixpath.join(self.dir, self._pointer["file"]))))
+        return [json.loads(s) for s in tbl.column("line").to_pylist()]
+
+    def entries(self, since: int | None = None, as_of: int | None = None,
+                newest_first: bool = False) -> Iterator[tuple[int, dict]]:
+        """Lazy ``(version, entry)`` pairs.
+
+        ``since=None`` replays table STATE up to ``as_of`` (default: the
+        newest version): the latest checkpoint's collapsed entries, tagged
+        with its version, when it covers ``as_of``, then the JSON entries
+        after it — O(commits since the checkpoint). An integer ``since``
+        yields the raw entries of versions ``(since, as_of]`` instead: what
+        changed, never a collapsed state. ``newest_first`` reverses the
+        order (checkpoint last) so a caller can stop at the first hit.
+
+        Raises :class:`LogTruncated` when versions the read needs were
+        cleaned by ``checkpoint_log(clean=True)`` — never a silently partial
+        answer."""
+        base = None
+        if since is None:
+            ck = self.checkpoint
+            if ck is not None and (as_of is None or as_of >= ck):
+                base = ck
+            lo = 0 if base is None else base + 1
+        else:
+            lo = since + 1
+        # a clean deletes EVERY json file <= the checkpoint, so versions from
+        # lo are intact unless the oldest surviving file starts above lo
+        if (base is None and self._has_pointer
+                and (not self.versions or self.versions[0] > lo)
+                and self.checkpoint >= lo):
+            raise LogTruncated(
+                f"log version {lo} predates log checkpoint {self.checkpoint} "
+                "and the covered json files were cleaned"
+            )
+        vs = [v for v in self.versions
+              if v >= lo and (as_of is None or v <= as_of)]
+
+        def replay() -> Iterator[tuple[int, dict]]:
+            if base is not None and not newest_first:
+                yield from ((base, e) for e in self.checkpoint_entries())
+            for v in (reversed(vs) if newest_first else vs):
+                text = self.io.read_text(posixpath.join(self.dir, f"{v:020d}.json"))
+                yield from ((v, json.loads(line)) for line in text.splitlines())
+            if base is not None and newest_first:
+                yield from ((base, e) for e in self.checkpoint_entries())
+
+        return replay()
+
+    def snapshot(self, as_of: int | None = None) -> LogSnapshot:
+        snap = LogSnapshot()
+        for v, e in self.entries(as_of=as_of):
+            snap.apply(v, e)
+        return snap
+
+
+def log_snapshot(out_dir: str, io: FsIO | None = None,
+                 as_of: int | None = None) -> LogSnapshot | None:
+    """Table state at ``as_of`` (default: the newest version), or None when
+    no log exists (pre-commit state)."""
+    log = CommitLog(_io(out_dir, io))
+    return log.snapshot(as_of) if log.exists else None
+
+
+def _meta_entry(schema_json: str) -> dict:
+    return {"metaData": {"schemaString": schema_json,
+                         "partitionColumns": ["pds"],
+                         "format": {"provider": "parquet"}}}
+
 
 def write_commit_log(out_dir: str, pds: date, io: FsIO | None = None,
                      schema_json: str | None = None) -> str | None:
-    """Numbered-JSONL commit log — the A28/A29 analog of the reference's
-    ``_delta_log`` writer (``/root/reference/.../Pandora/Databricks/
-    DeltaLake.fs:176-444``): a ``_log/<%020d>.json`` file holding one
-    ``protocol`` line, one ``metaData`` line (schema + partition column), and
+    """Commit every completed, not yet committed data file in ONE log entry
+    (the reference's ``_delta_log`` writer, ``DeltaLake.fs:176-444``): a
+    ``protocol`` line, a ``metaData`` line (schema + partition column), and
     one ``add`` line per data file (path, size, sha256, partitionValues).
 
-    Index discovery mirrors the reference's fold-max-plus-one over existing
-    numeric filenames (``README.md:608-645``); the write is optimistic —
-    ``FsIO.create_exclusive`` plays the role of the reference's upload-
-    with-overwrite=false, and on collision (concurrent committer) the log is
-    re-read so files the winner committed are dropped from our payload before
-    the next index is tried. Only files not yet referenced by earlier log
-    entries are added, so re-running after resume appends exactly the new
-    files.
-    """
-    from ..schema import CHUNK_SCHEMA
-
+    Adds are marker-gated — only files whose writer completed its
+    checkpoint marker are committed — and exactly-once: files the snapshot
+    already references (added, or removed into a compaction target) are
+    never added again, so re-running after resume appends exactly the new
+    files. The commit goes through :func:`append_log_entry`; when a racing
+    committer added some of the same files first, the resulting
+    :class:`CommitConflict` re-plans from a fresh snapshot, which drops the
+    files the winner committed."""
     io = _io(out_dir, io)
-    data_dir, log_dir = io.join("data"), io.join("_log")
+    data_dir = io.join("data")
     if not io.isdir(data_dir):
         return None
-    io.makedirs(log_dir)
-
-    def _scan_log() -> tuple[set[str], list[int]]:
-        # "referenced" = ever added OR removed: neither may be re-added
-        # (a removed file's data lives on in its compaction target). A
-        # checkpoint's collapsed adds + remove tombstones stand in for any
-        # json files checkpoint_log(clean=True) deleted, and its version
-        # floors index allocation so new commits never reuse covered indices.
-        referenced: set[str] = set()
-        indices: list[int] = []
-        ckpt = read_log_checkpoint(out_dir, io)
-        if ckpt is not None:
-            indices.append(ckpt[0])
-            for entry in ckpt[1]:
-                if "add" in entry:
-                    referenced.add(entry["add"]["path"])
-                if "remove" in entry:
-                    referenced.add(entry["remove"]["path"])
-        for f in io.listdir(log_dir):
-            if not f.endswith(".json"):
-                continue
-            indices.append(int(f[:-5]))
-            for line in io.read_text(posixpath.join(log_dir, f)).splitlines():
-                entry = json.loads(line)
-                if "add" in entry:
-                    referenced.add(entry["add"]["path"])
-                if "remove" in entry:
-                    referenced.add(entry["remove"]["path"])
-        return referenced, indices
-
-    def _marker_index() -> dict[str, dict]:
-        """file_name -> integrity info from the checkpoint markers (written
-        executor-side, hashed in flight), so commit never re-reads data."""
-        idx: dict[str, dict] = {}
-        ckpt = io.join("_checkpoints")
-        for f in io.listdir(ckpt):
-            if f.startswith("part-") and f.endswith(".json"):
-                st = json.loads(io.read_text(posixpath.join(ckpt, f)))
-                if "file_name" in st:
-                    idx[st["file_name"]] = st
-        return idx
-
-    def _build_payload(referenced: set[str]) -> str | None:
-        # marker-gated adds: only files whose writer completed its checkpoint
-        # marker are committed. A crash between file publish and marker
-        # leaves an orphan that is never added (and never read — readers are
-        # log-gated, see committed_files) until the part's re-encode
-        # overwrites it; vacuum() reclaims anything unreferenced.
-        markers = _marker_index()
+    # an existing (even empty) _log makes readers log-gated from now on
+    io.makedirs(io.join("_log"))
+    while True:
+        snap = log_snapshot(out_dir, io)
+        referenced = snap.adds.keys() | snap.removes.keys()
+        # a crash between file publish and marker leaves an orphan that is
+        # never added (nor read — readers are log-gated) until the part's
+        # re-encode overwrites it; vacuum() reclaims anything unreferenced
+        markers = _marker_index(io)
         new_files = sorted(
             f for f in io.listdir(data_dir)
             if f.endswith(".parquet") and f not in referenced and f in markers
         )
         if not new_files:
             return None
-        lines = [
-            json.dumps({"protocol": PROTOCOL}),
-            json.dumps(
-                {
-                    "metaData": {
-                        "schemaString": schema_json or CHUNK_SCHEMA.json(),
-                        "partitionColumns": ["pds"],
-                        "format": {"provider": "parquet"},
-                    }
-                }
-            ),
-        ]
+        lines = [{"protocol": PROTOCOL},
+                 _meta_entry(schema_json or CHUNK_SCHEMA.json())]
         for f in new_files:
-            path = posixpath.join(data_dir, f)
             info = markers[f]
-            lines.append(
-                json.dumps(
-                    {
-                        "add": {
-                            "path": f,
-                            "size": info["file_size"],
-                            "sha256": info["file_sha256"],
-                            # date-partitioned encodes record each file's own
-                            # partition date in its marker; legacy markers
-                            # fall back to the run-level pds
-                            "partitionValues": {
-                                "pds": info.get("pds", pds.isoformat())
-                            },
-                            "dataChange": True,
-                            "modificationTime": io.mtime_ms(path),
-                        }
-                    }
-                )
-            )
-        return "\n".join(lines) + "\n"
+            lines.append({"add": {
+                "path": f,
+                "size": info["file_size"],
+                "sha256": info["file_sha256"],
+                # date-partitioned encodes record each file's own partition
+                # date in its marker; legacy markers fall back to the run's
+                "partitionValues": {"pds": info.get("pds", pds.isoformat())},
+                "dataChange": True,
+                "modificationTime": io.mtime_ms(posixpath.join(data_dir, f)),
+            }})
+        try:
+            return append_log_entry(out_dir, lines, io, snap.version)
+        except CommitConflict:
+            continue
 
-    referenced, indices = _scan_log()
-    payload = _build_payload(referenced)
-    if payload is None:
-        return None
-    idx = (max(indices) + 1) if indices else 0
-    while True:  # optimistic retry on index collision (A29)
-        target = posixpath.join(log_dir, f"{idx:020d}.json")
-        if io.create_exclusive(target, payload.encode()):
-            return target
-        # a concurrent committer won this index: re-read the log so files
-        # it committed are dropped from our payload (exactly-once — the
-        # 'only files not yet referenced' invariant), then try next index
-        referenced, indices = _scan_log()
-        payload = _build_payload(referenced)
-        if payload is None:
-            return None
-        idx = max(idx + 1, (max(indices) + 1) if indices else 0)
+
+def _marker_index(io: FsIO) -> dict[str, dict]:
+    """file_name -> integrity info from the checkpoint markers (written
+    executor-side, hashed in flight), so commit never re-reads data."""
+    idx: dict[str, dict] = {}
+    ckpt = io.join("_checkpoints")
+    for f in io.listdir(ckpt):
+        if f.startswith("part-") and f.endswith(".json"):
+            st = json.loads(io.read_text(posixpath.join(ckpt, f)))
+            if "file_name" in st:
+                idx[st["file_name"]] = st
+    return idx
 
 
 def read_commit_log(out_dir: str, io: FsIO | None = None) -> list[dict]:
-    """All committed entries across the numbered log files, in order."""
-    io = _io(out_dir, io)
-    log_dir = io.join("_log")
-    entries: list[dict] = []
-    for f in io.listdir(log_dir):
-        if f.endswith(".json"):
-            entries.extend(
-                json.loads(line)
-                for line in io.read_text(posixpath.join(log_dir, f)).splitlines()
-            )
-    return entries
-
-
-_LAST_CHECKPOINT = "_last_checkpoint"
+    """The committed entries in replay order: the latest checkpoint's
+    collapsed entries (when the log has one), then every JSON entry after
+    it. Without a checkpoint this is every entry of every log file."""
+    return [e for _, e in CommitLog(_io(out_dir, io)).entries()]
 
 
 def checkpoint_log(out_dir: str, io: FsIO | None = None,
                    clean: bool = False) -> dict:
     """Delta-style commit-log CHECKPOINT (``DeltaLake`` checkpoint contract;
-    Delta writes one every 10 commits): collapse every entry with index <=
-    the latest version V into one parquet snapshot
-    ``_log/<V>.checkpoint.parquet`` plus a ``_log/_last_checkpoint`` pointer,
-    so readers replay the checkpoint + only the json files AFTER it instead
-    of the whole tail. At 100 TB a long-lived table accumulates 10^4-10^5
-    commits; without this every reader's planning pass is O(log length).
+    Delta writes one every 10 commits): collapse the state at the latest
+    version V into one parquet snapshot ``_log/<V>.checkpoint.parquet``
+    plus a ``_log/_last_checkpoint`` pointer, so readers replay the
+    checkpoint + only the json files AFTER it instead of the whole tail. At
+    100 TB a long-lived table accumulates 10^4-10^5 commits; without this
+    every reader's planning pass is O(log length).
 
-    State collapsed: the last ``add`` per live path (adds minus removes),
-    the latest ``metaData``, the latest ``txn`` per appId (the stream
-    sink's idempotence axis survives checkpointing), and the surviving
-    deletion-vector actions (``"v"``-stamped; a later ``dvRestore`` simply
-    replaces state — :func:`committed_dv_actions`). The snapshot is one
-    snappy parquet column of raw json lines — byte-faithful to the log
+    State collapsed (:class:`LogSnapshot`): the add record per live path,
+    the remove tombstones, the latest ``metaData``, the latest ``txn`` per
+    appId (the stream sink's idempotence axis survives checkpointing), and
+    the surviving ``"v"``-stamped deletion-vector actions. The snapshot is
+    one snappy parquet column of raw json lines — byte-faithful to the log
     format, ~10x smaller than the json tail it replaces.
 
     ``clean=True`` additionally deletes the json log files the checkpoint
@@ -511,41 +608,16 @@ def checkpoint_log(out_dir: str, io: FsIO | None = None,
     import pyarrow.parquet as pq
 
     io = _io(out_dir, io)
-    log_dir = io.join("_log")
-    versions = log_versions(out_dir, io)
-    if not versions:
+    log = CommitLog(io)
+    if not log.versions:
         raise ValueError("no commit log to checkpoint")
-    v = versions[-1]
-    adds: dict[str, dict] = {}
-    removes: dict[str, dict] = {}  # tombstones: 'referenced, never re-add'
-    meta: dict | None = None
-    txns: dict[str, dict] = {}
-    dvs: list[dict] = []  # deletion-vector actions, "v"-stamped
-    for f in sorted(io.listdir(log_dir)):
-        if not f.endswith(".json") or int(f[:-5]) > v:
-            continue
-        idx = int(f[:-5])
-        for line in io.read_text(posixpath.join(log_dir, f)).splitlines():
-            entry = json.loads(line)
-            if "add" in entry:
-                adds[entry["add"]["path"]] = entry
-                removes.pop(entry["add"]["path"], None)
-            if "remove" in entry:
-                removes[entry["remove"]["path"]] = entry
-                adds.pop(entry["remove"]["path"], None)
-            if "metaData" in entry:
-                meta = entry
-            if "txn" in entry:
-                txns[entry["txn"]["appId"]] = entry
-            if "dv" in entry:
-                dvs.append(dict(entry["dv"], v=entry["dv"].get("v", idx)))
-            if "dvRestore" in entry:
-                dvs = [dict(a) for a in entry["dvRestore"]["keep"]]
-    lines = (([meta] if meta else [])
-             + [txns[a] for a in sorted(txns)]
-             + [adds[p] for p in sorted(adds)]
-             + [removes[p] for p in sorted(removes)]
-             + [{"dv": a} for a in dvs])
+    snap = log.snapshot()
+    v = snap.version
+    lines = (([{"metaData": snap.meta}] if snap.meta else [])
+             + [{"txn": snap.txns[a]} for a in sorted(snap.txns)]
+             + [{"add": snap.adds[p]} for p in sorted(snap.adds)]
+             + [{"remove": snap.removes[p]} for p in sorted(snap.removes)]
+             + [{"dv": a} for a in snap.dvs])
     buf = pa.BufferOutputStream()
     pq.write_table(
         pa.table({"line": pa.array([json.dumps(e) for e in lines], pa.string())}),
@@ -553,36 +625,26 @@ def checkpoint_log(out_dir: str, io: FsIO | None = None,
     )
     name = f"{v:020d}.checkpoint.parquet"
     tag = uuid.uuid4().hex[:8]
-    io.publish_bytes(posixpath.join(log_dir, name),
+    io.publish_bytes(posixpath.join(log.dir, name),
                      buf.getvalue().to_pybytes(), attempt_tag=tag)
-    io.publish_bytes(posixpath.join(log_dir, _LAST_CHECKPOINT),
+    io.publish_bytes(posixpath.join(log.dir, _LAST_CHECKPOINT),
                      json.dumps({"version": v, "file": name}).encode(),
                      attempt_tag=tag)
-    removed = 0
     if clean:
-        for f in list(io.listdir(log_dir)):
-            if f.endswith(".json") and int(f[:-5]) <= v:
-                io.fs.delete_file(posixpath.join(log_dir, f))
-                removed += 1
+        for x in log.versions:
+            io.fs.delete_file(posixpath.join(log.dir, f"{x:020d}.json"))
     return {"version": v, "entries": len(lines), "file": name,
-            "cleaned_json_files": removed}
+            "cleaned_json_files": len(log.versions) if clean else 0}
 
 
 def read_log_checkpoint(out_dir: str, io: FsIO | None = None
                         ) -> tuple[int, list[dict]] | None:
     """(checkpoint version, collapsed entries) per ``_last_checkpoint``, or
     None when the log has never been checkpointed."""
-    import pyarrow.parquet as pq
-
-    io = _io(out_dir, io)
-    log_dir = io.join("_log")
-    pointer = posixpath.join(log_dir, _LAST_CHECKPOINT)
-    if not io.exists(pointer):
+    log = CommitLog(_io(out_dir, io))
+    if log.checkpoint is None:
         return None
-    d = json.loads(io.read_text(pointer))
-    tbl = pq.read_table(pa.BufferReader(
-        io.read_bytes(posixpath.join(log_dir, d["file"]))))
-    return int(d["version"]), [json.loads(s) for s in tbl.column("line").to_pylist()]
+    return log.checkpoint, log.checkpoint_entries()
 
 
 def committed_files(out_dir: str, io: FsIO | None = None,
@@ -592,54 +654,15 @@ def committed_files(out_dir: str, io: FsIO | None = None,
     This is what makes readers log-gated: half-published crash leftovers and
     compacted-away files are invisible.
 
-    ``as_of`` replays only log files with index <= ``as_of`` — time travel:
-    the table exactly as some earlier commit left it (files removed *later*,
-    e.g. by compaction, are still present at that version until vacuumed,
-    which is why vacuum's retention window also bounds how far back
-    time-travel reads stay valid).
-
-    When the log has been checkpointed (:func:`checkpoint_log`) and the
-    checkpoint covers the requested version, replay starts from the
-    checkpoint's collapsed state and touches only the json files AFTER it —
-    O(commits since checkpoint), not O(log). An ``as_of`` BEFORE the
-    checkpoint replays the json files directly (they are retained unless
-    the checkpoint was taken with ``clean=True``)."""
-    io = _io(out_dir, io)
-    log_dir = io.join("_log")
-    if not io.isdir(log_dir):
-        return None
-    live: set[str] = set()
-    start_after = -1
-    ckpt = read_log_checkpoint(out_dir, io)
-    if ckpt is not None and (as_of is None or as_of >= ckpt[0]):
-        start_after = ckpt[0]
-        live = {e["add"]["path"] for e in ckpt[1] if "add" in e}
-    elif ckpt is not None and as_of is not None and as_of < ckpt[0]:
-        # pre-checkpoint time travel replays raw json; if checkpoint_log ran
-        # with clean=True those files are gone — fail loudly, never return a
-        # silently incomplete version
-        json_idx = [int(f[:-5]) for f in io.listdir(log_dir)
-                    if f.endswith(".json")]
-        if not json_idx or min(json_idx) > 0:
-            raise ValueError(
-                f"time travel to version {as_of} predates log checkpoint "
-                f"{ckpt[0]} and the covered json files were cleaned"
-            )
-    for f in sorted(io.listdir(log_dir)):
-        if not f.endswith(".json"):
-            continue
-        idx = int(f[:-5])
-        if idx <= start_after:
-            continue
-        if as_of is not None and idx > as_of:
-            break
-        for line in io.read_text(posixpath.join(log_dir, f)).splitlines():
-            entry = json.loads(line)
-            if "add" in entry:
-                live.add(entry["add"]["path"])
-            if "remove" in entry:
-                live.discard(entry["remove"]["path"])
-    return sorted(live)
+    ``as_of`` replays only versions <= ``as_of`` — time travel: the table
+    exactly as some earlier commit left it (files removed *later*, e.g. by
+    compaction, are still present at that version until vacuumed, which is
+    why vacuum's retention window also bounds how far back time-travel reads
+    stay valid). Replay starts from the latest checkpoint that covers the
+    version (:meth:`CommitLog.entries`); a version before a checkpoint taken
+    with ``clean=True`` fails loudly."""
+    snap = log_snapshot(out_dir, io, as_of)
+    return None if snap is None else snap.files
 
 
 def committed_dv_actions(out_dir: str, io: FsIO | None = None,
@@ -664,58 +687,79 @@ def committed_dv_actions(out_dir: str, io: FsIO | None = None,
     actions a sequential replay had already dropped. Each action carries
     ``"v"`` (its original commit index) so identity survives checkpoints,
     where the source file index is gone."""
-    io = _io(out_dir, io)
-    log_dir = io.join("_log")
-    if not io.isdir(log_dir):
-        return []
-    kept: list[dict] = []  # actions with resolved "v"
-    start_after = -1
-    ckpt = read_log_checkpoint(out_dir, io)
-    if ckpt is not None and (as_of is None or as_of >= ckpt[0]):
-        start_after = ckpt[0]
-        kept = [dict(e["dv"]) for e in ckpt[1] if "dv" in e]
-    for f in sorted(io.listdir(log_dir)):
-        if not f.endswith(".json"):
-            continue
-        idx = int(f[:-5])
-        if idx <= start_after:
-            continue
-        if as_of is not None and idx > as_of:
-            break
-        for line in io.read_text(posixpath.join(log_dir, f)).splitlines():
-            entry = json.loads(line)
-            if "dv" in entry:
-                kept.append(dict(entry["dv"], v=entry["dv"].get("v", idx)))
-            if "dvRestore" in entry:
-                kept = [dict(a) for a in entry["dvRestore"]["keep"]]
-    return kept
+    snap = log_snapshot(out_dir, io, as_of)
+    return [] if snap is None else snap.dvs
 
 
 def log_versions(out_dir: str, io: FsIO | None = None) -> list[int]:
-    """Committed log indices, in order (the time-travel axis)."""
-    io = _io(out_dir, io)
-    d = io.join("_log")
-    return sorted(int(f[:-5]) for f in io.listdir(d) if f.endswith(".json"))
+    """Committed JSON log indices, in order (the time-travel axis)."""
+    return CommitLog(_io(out_dir, io)).versions
 
 
-def append_log_entry(out_dir: str, lines: list[dict], io: FsIO | None = None) -> str:
-    """Append one numbered log file holding ``lines`` (e.g. compaction's
-    add+remove set) with the same optimistic exclusive-create index protocol
-    as :func:`write_commit_log`."""
+def append_log_entry(out_dir: str, lines: list[dict], io: FsIO | None,
+                     read_version: int) -> str:
+    """Commit ``lines`` as ONE numbered log file — the store's only commit
+    path (Delta's optimistic protocol, ``DeltaLake.fs:176-444``).
+
+    ``read_version`` is the version of the snapshot the commit was planned
+    from (-1 for an empty log). Before each exclusive-create attempt the
+    entries committed after it are re-read; :class:`CommitConflict` is
+    raised if any of them
+
+    (a) adds or removes a path this commit adds or removes;
+    (b) carries ``dv``/``dvRestore``, while this commit re-encodes rows (a
+        ``dataChange: true`` remove) or writes deletion-vector state;
+    (c) removes with ``dataChange: true``, while this commit writes
+        deletion-vector state.
+
+    Compaction's ``dataChange: false`` moves keep chunk ids, so (b) and (c)
+    ignore them. Otherwise the commit takes the next free index;
+    ``FsIO.create_exclusive`` plays the reference's upload-with-
+    overwrite=false, and losing an index race re-checks the newly committed
+    entries. Nothing here re-plans: :func:`write_commit_log` re-plans its
+    blind appends, while DML raises and leaves its published files as
+    orphans for :func:`vacuum`, as after a crash."""
     io = _io(out_dir, io)
     log_dir = io.join("_log")
     io.makedirs(log_dir)
-    payload = "\n".join(json.dumps(e) for e in lines) + "\n"
-    indices = [int(f[:-5]) for f in io.listdir(log_dir) if f.endswith(".json")]
-    ckpt = read_log_checkpoint(out_dir, io)
-    if ckpt is not None:
-        indices.append(ckpt[0])  # never reuse a checkpointed index
-    idx = (max(indices) + 1) if indices else 0
+    payload = ("\n".join(json.dumps(e) for e in lines) + "\n").encode()
+    paths = {e[k]["path"] for e in lines for k in ("add", "remove") if k in e}
+    rewrites = any(e["remove"].get("dataChange", True)
+                   for e in lines if "remove" in e)
+    writes_dv = any("dv" in e or "dvRestore" in e for e in lines)
+
+    def clash(entry: dict) -> str | None:
+        for k in ("add", "remove"):
+            if k in entry and entry[k]["path"] in paths:
+                return f"{k} of {entry[k]['path']!r}, which this commit touches"
+        if ("dv" in entry or "dvRestore" in entry) and (rewrites or writes_dv):
+            return "a deletion-vector change to rows this commit planned from"
+        if (writes_dv and "remove" in entry
+                and entry["remove"].get("dataChange", True)):
+            return (f"a rewrite of {entry['remove']['path']!r}, which this "
+                    "commit's deletion vector addresses")
+        return None
+
+    seen = read_version
     while True:
+        log = CommitLog(io)
+        try:
+            newer = log.entries(since=seen)
+        except LogTruncated as err:
+            raise CommitConflict(
+                f"versions after {seen} were checkpointed away before this "
+                "commit could check them; nothing was committed") from err
+        for v, e in newer:
+            why = clash(e)
+            if why:
+                raise CommitConflict(
+                    f"version {v} committed {why} after this commit read "
+                    f"version {read_version}; nothing was committed")
+        idx = max(log.version, seen) + 1
         target = posixpath.join(log_dir, f"{idx:020d}.json")
-        if io.create_exclusive(target, payload.encode()):
+        if io.create_exclusive(target, payload):
             return target
-        idx += 1
+        seen = idx - 1
 
 
 def vacuum(out_dir: str, io: FsIO | None = None,
@@ -735,14 +779,14 @@ def vacuum(out_dir: str, io: FsIO | None = None,
     import time
 
     io = _io(out_dir, io)
-    live = committed_files(out_dir, io)
-    if live is None:
+    snap = log_snapshot(out_dir, io)
+    if snap is None:
         return []
     data_dir = io.join("data")
     now_ms = time.time() * 1000
     doomed = [
         f for f in io.listdir(data_dir)
-        if f.endswith(".parquet") and f not in set(live)
+        if f.endswith(".parquet") and f not in snap.adds
         and now_ms - io.mtime_ms(posixpath.join(data_dir, f)) >= min_age_sec * 1000
     ]
     for f in doomed:
@@ -753,7 +797,7 @@ def vacuum(out_dir: str, io: FsIO | None = None,
     # exactly what vacuuming a data file already forfeits
     dv_dir = io.join("_dv")
     if io.isdir(dv_dir):
-        live_dv = {a["dvFile"] for a in committed_dv_actions(out_dir, io)}
+        live_dv = {a["dvFile"] for a in snap.dvs}
         for f in io.listdir(dv_dir):
             if (f.endswith(".json") and f not in live_dv
                     and now_ms - io.mtime_ms(posixpath.join(dv_dir, f))

@@ -66,34 +66,26 @@ def read_column_stats(out_dir: str, io: FsIO | None = None) -> dict | None:
                                                   files[-1][1])))
 
 
-def _log_delta(out_dir: str, io: FsIO, lo: int, hi: int
-               ) -> tuple[list[str], bool]:
+def _log_delta(io: FsIO, lo: int, hi: int) -> tuple[list[str], bool]:
     """(files added in log versions (lo, hi], any-removes?)."""
-    from .encode import read_log_checkpoint
+    from .encode import CommitLog, LogTruncated
 
-    log_dir = io.join("_log")
-    ckpt = read_log_checkpoint(out_dir, io)
-    if ckpt is not None and ckpt[0] > lo:
-        return [], True  # checkpointed-over gap: can't prove append-only
+    try:
+        entries = CommitLog(io).entries(since=lo, as_of=hi)
+    except LogTruncated:
+        return [], True  # cleaned-away gap: can't prove append-only
     added: list[str] = []
     removed = False
-    for f in sorted(io.listdir(log_dir)):
-        if not f.endswith(".json"):
-            continue
-        idx = int(f[:-5])
-        if idx <= lo or idx > hi:
-            continue
-        for line in io.read_text(posixpath.join(log_dir, f)).splitlines():
-            entry = json.loads(line)
-            if "add" in entry:
-                added.append(entry["add"]["path"])
-            if "remove" in entry:
-                removed = True
-            if "dv" in entry or "dvRestore" in entry:
-                # deletion vectors change existing files' VISIBLE rows without
-                # touching the file set: same consequence as a remove — HLL
-                # state is insert-only, soft-deleted values can't subtract
-                removed = True
+    for _, entry in entries:
+        if "add" in entry:
+            added.append(entry["add"]["path"])
+        if "remove" in entry:
+            removed = True
+        if "dv" in entry or "dvRestore" in entry:
+            # deletion vectors change existing files' VISIBLE rows without
+            # touching the file set: same consequence as a remove — HLL
+            # state is insert-only, soft-deleted values can't subtract
+            removed = True
     return added, removed
 
 
@@ -105,17 +97,13 @@ def analyze_table(spark: SparkSession, out_dir: str,
     persist it as ``_stats/<log_version>.json``. Idempotent per version:
     re-running at an unchanged table returns the stored document without
     touching data. Returns the stats document."""
-    from .encode import log_versions
+    from .encode import CommitLog
     from .table import decode_table, read_table_spec
 
     io = _io(out_dir, io)
-    versions = log_versions(out_dir, io)
-    from .encode import read_log_checkpoint
-
-    ckpt = read_log_checkpoint(out_dir, io)
-    if not versions and ckpt is None:
+    version = CommitLog(io).version
+    if version < 0:
         raise ValueError("analyze_table requires a committed table")
-    version = max(versions + ([ckpt[0]] if ckpt else []))
     spec = read_table_spec(out_dir, io)
     known = {f.name for f in spec.schema.fields}
     unknown = [c for c in columns if c not in known]
@@ -133,7 +121,7 @@ def analyze_table(spark: SparkSession, out_dir: str,
     if (incremental and base is not None
             and base.get("p") == p and base.get("seed") == seed
             and set(base.get("columns", {})) == set(columns)):
-        added, removed = _log_delta(out_dir, io, base["version"], version)
+        added, removed = _log_delta(io, base["version"], version)
         if not removed:
             new_files = added
             base_regs = {

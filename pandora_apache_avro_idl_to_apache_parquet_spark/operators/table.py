@@ -66,7 +66,8 @@ from ..functions import codecs as C
 from ..functions.fsio import FsIO
 from ..functions.hashing import klondike, sha256
 from ..plans.cost import select_int_codec, select_str_codec, select_typed_codec
-from .encode import _io, write_commit_log
+from . import encode
+from .encode import LogSnapshot, _io, log_snapshot, write_commit_log
 
 DEFAULT_CHUNK_ROWS = 65536
 
@@ -1572,23 +1573,15 @@ def compact_table(out_dir: str, io: FsIO | None = None,
     """
     import pyarrow.parquet as pq
 
-    from .encode import append_log_entry, committed_files, read_commit_log
-
     io = _io(out_dir, io)
+    snap = _table_snapshot(out_dir, io, "compact_table")
     spec = read_table_spec(out_dir, io)
-    live = committed_files(out_dir, io)
-    if live is None:
-        raise ValueError("compact_table requires a committed table (no _log found)")
-    sizes = {
-        e["add"]["path"]: e["add"]["size"]
-        for e in read_commit_log(out_dir, io)
-        if "add" in e
-    }
+    live = snap.files
     groups: list[list[str]] = []
     cur: list[str] = []
     cur_bytes = 0
     for f in live:
-        fsize = sizes.get(f, 0)
+        fsize = snap.adds[f]["size"]
         if cur and cur_bytes + fsize > max_group_bytes:
             groups.append(cur)
             cur, cur_bytes = [], 0
@@ -1608,11 +1601,8 @@ def compact_table(out_dir: str, io: FsIO | None = None,
     payload_cols = [f.name for f in spec.schema.fields]
     data_dir = io.join("data")
     tag = uuid.uuid4().hex[:8]
-    entries: list[dict] = [
-        {"metaData": {"schemaString": chunk_schema.json(),
-                      "partitionColumns": ["pds"], "format": {"provider": "parquet"}}}
-    ]
-    new_files = 0
+    entries: list[dict] = []
+    new_files = removed = 0
     for i, group in enumerate(groups):
         if len(group) <= 1:
             continue  # singleton stays as-is (still live, not removed)
@@ -1636,12 +1626,13 @@ def compact_table(out_dir: str, io: FsIO | None = None,
             ],
         )
         new_files += 1
+        removed += len(group)
         entries.append({"add": {"path": name, "size": size, "sha256": sha,
                                 "dataChange": False}})
         entries += [{"remove": {"path": f, "dataChange": False}} for f in group]
-    log = append_log_entry(out_dir, entries, io)
-    after = len(committed_files(out_dir, io))
-    return {"files_before": len(live), "files_after": after, "log": log}
+    log = _commit(out_dir, io, spec, snap.version, entries)
+    return {"files_before": len(live),
+            "files_after": len(live) - removed + new_files, "log": log}
 
 
 def _promote_to(tables: list[pa.Table], arrow_schema: pa.Schema) -> pa.Table:
@@ -2242,19 +2233,30 @@ def table_stats(spark: SparkSession, out_dir: str,
 # ------------------------------------------- row-level DELETE / MERGE (CoW)
 
 
-def _file_pds_map(out_dir: str, io: FsIO) -> dict[str, date]:
-    """Each live-or-historical file's partition date from its commit-log add
-    record — the source of truth a rewrite must PRESERVE per file so
-    date-partitioned (``pds_col``) tables keep pruning correctly after DML."""
-    from .encode import read_commit_log
+def _table_snapshot(out_dir: str, io: FsIO, op: str) -> LogSnapshot:
+    """The snapshot a mutator plans from and commits against."""
+    snap = log_snapshot(out_dir, io)
+    if snap is None:
+        raise ValueError(f"{op} requires a committed table (no _log found)")
+    return snap
 
-    out: dict[str, date] = {}
-    for e in read_commit_log(out_dir, io):
-        if "add" in e:
-            v = e["add"].get("partitionValues", {}).get("pds")
-            if v:
-                out[e["add"]["path"]] = date.fromisoformat(v)
-    return out
+
+def _file_pds(add: dict) -> date | None:
+    """A file's partition date from its add record (None when unstamped)."""
+    v = add.get("partitionValues", {}).get("pds")
+    return date.fromisoformat(v) if v else None
+
+
+def _rewrite_groups(spark: SparkSession, snap: LogSnapshot,
+                    matched: list[str], pds: date) -> DataFrame:
+    """One copy-on-write rewrite group per matched file, stamped with THAT
+    file's partition date from its add record in ``snap`` — a rewrite must
+    preserve it so date-partitioned (``pds_col``) tables keep pruning
+    correctly after DML."""
+    return spark.createDataFrame(
+        [(f, i, _file_pds(snap.adds[f]) or pds) for i, f in enumerate(matched)],
+        "__src_file string, part_id int, __pds date",
+    )
 
 
 def _rewrite_job(survivors: DataFrame, io: FsIO, spec: TableSpec,
@@ -2300,11 +2302,21 @@ def _rewrite_job(survivors: DataFrame, io: FsIO, spec: TableSpec,
     return adds
 
 
-def _meta_entry(spec: TableSpec) -> dict:
-    chunk_schema = chunk_schema_for(spec)
-    return {"metaData": {"schemaString": chunk_schema.json(),
-                         "partitionColumns": ["pds"],
-                         "format": {"provider": "parquet"}}}
+def _removes(paths: list[str]) -> list[dict]:
+    return [{"remove": {"path": f, "dataChange": True}} for f in paths]
+
+
+def _commit(out_dir: str, io: FsIO, spec: TableSpec, read_version: int,
+            actions: list[dict]) -> str:
+    """ONE conflict-checked log entry — the table's ``metaData`` line, then
+    ``actions`` — planned from the snapshot at ``read_version``. A
+    concurrent conflicting commit raises ``CommitConflict``
+    (:func:`..operators.encode.append_log_entry`); files this operation
+    already published stay orphans for ``vacuum``."""
+    return encode.append_log_entry(
+        out_dir, [encode._meta_entry(chunk_schema_for(spec).json())] + actions,
+        io, read_version,
+    )
 
 
 def _flat_for_rewrite(df: DataFrame, spec: TableSpec) -> DataFrame:
@@ -2379,42 +2391,32 @@ def delete_where(spark: SparkSession, out_dir: str, condition,
        versions before the entry still see the pre-delete rows until
        ``vacuum`` reclaims them.
     """
-    from .encode import append_log_entry, committed_files
-
     io = _io(out_dir, io)
-    if committed_files(out_dir, io) is None:
-        raise ValueError("delete_where requires a committed table (no _log found)")
+    snap = _table_snapshot(out_dir, io, "delete_where")
     spec = read_table_spec(out_dir, io)
     pds = pds or date(2026, 1, 1)
 
     probe = decode_table(spark, out_dir, columns=condition_cols, io=io,
-                         chunk_filter=chunk_filter, meta_cols=["__src_file"])
+                         chunk_filter=chunk_filter, meta_cols=["__src_file"],
+                         as_of=snap.version)
     matched, n_deleted = _dml_matched_files(probe.filter(condition))
     if not matched:
         return {"rows_deleted": 0, "files_rewritten": 0,
                 "files_removed": 0, "log": None}
 
     run = f"dw{uuid.uuid4().hex[:8]}"
-    fp = _file_pds_map(out_dir, io)
-    part_map = spark.createDataFrame(
-        [(f, i, fp.get(f, pds)) for i, f in enumerate(matched)],
-        "__src_file string, part_id int, __pds date",
-    )
     dec = decode_table(spark, out_dir, io=io, meta_cols=["__src_file"],
-                       chunk_filter=F.col("__src_file").isin(matched))
+                       chunk_filter=F.col("__src_file").isin(matched),
+                       as_of=snap.version)
     survivors = (
-        dec.join(F.broadcast(part_map), "__src_file")
+        dec.join(F.broadcast(_rewrite_groups(spark, snap, matched, pds)),
+                 "__src_file")
         .filter(~F.coalesce(condition, F.lit(False)))
         .drop("__src_file")
     )
     adds = _rewrite_job(_flat_for_rewrite(survivors, spec), io, spec,
                         chunk_rows, pds, run, pds_from_col=True)
-    log = append_log_entry(
-        out_dir,
-        [_meta_entry(spec)] + adds
-        + [{"remove": {"path": f, "dataChange": True}} for f in matched],
-        io,
-    )
+    log = _commit(out_dir, io, spec, snap.version, adds + _removes(matched))
     return {"rows_deleted": n_deleted, "files_rewritten": len(adds),
             "files_removed": len(matched), "log": log}
 
@@ -2468,6 +2470,51 @@ def _dv_packed_map(io: FsIO, actions: list[dict]) -> dict[str, bytes]:
             for cid, pos in load_dv_map(io, actions).items()}
 
 
+def _dv_probe(spark: SparkSession, out_dir: str, io: FsIO, read_version: int,
+              condition, condition_cols: list[str] | None, chunk_filter,
+              cow_op: str) -> tuple[int, dict[str, str]]:
+    """Probe, cap and pack for the merge-on-read DML: one selective decode
+    at ``read_version`` (``chunk_filter`` prunes via zone maps/blooms)
+    yields matched rows' (chunk_id, physical ordinal); returns the matched
+    row count and the packed ordinals per chunk, ``(0, {})`` on no match.
+    Past ``DV_MAX_DELETED_ROWS`` the predicate is not sparse and the
+    copy-on-write ``cow_op`` is the right tool."""
+    probe = decode_table(spark, out_dir, columns=condition_cols, io=io,
+                         chunk_filter=chunk_filter,
+                         meta_cols=["chunk_id", "__pos"], as_of=read_version)
+    hits = (probe.filter(condition).select("chunk_id", "__pos")
+            .localCheckpoint(eager=False))
+    total = hits.count()
+    if total == 0:
+        return 0, {}
+    if total > DV_MAX_DELETED_ROWS:
+        raise ValueError(
+            f"predicate matches {total} rows "
+            f"(> DV_MAX_DELETED_ROWS={DV_MAX_DELETED_ROWS}); this is a broad "
+            f"{cow_op.split('_')[0]} — use the copy-on-write {cow_op} instead"
+        )
+    rows = (
+        hits.groupBy("chunk_id")
+        .agg(F.sort_array(F.collect_list("__pos")).alias("pos"))
+        .collect()
+    )
+    return total, {r["chunk_id"]: _pack_positions(np.asarray(r["pos"]))
+                   for r in rows}
+
+
+def _publish_dv(io: FsIO, chunks: dict[str, str], total: int) -> dict:
+    """Publish packed ordinals to ``_dv/dv-<uuid>.json``; returns the
+    metadata-only ``{"dv": ...}`` log action that makes them visible."""
+    name = f"dv-{uuid.uuid4().hex[:12]}.json"
+    io.makedirs(io.join("_dv"))
+    io.publish_bytes(
+        io.join("_dv/" + name),
+        json.dumps({"chunks": chunks, "cardinality": total}).encode(),
+        attempt_tag=name[3:15],
+    )
+    return {"dv": {"dvFile": name, "cardinality": total}}
+
+
 def dv_delete_where(spark: SparkSession, out_dir: str, condition,
                     io: FsIO | None = None,
                     condition_cols: list[str] | None = None,
@@ -2484,49 +2531,18 @@ def dv_delete_where(spark: SparkSession, out_dir: str, condition,
     ``dvRestore``, and any later CoW rewrite of a file materializes the
     deletes (survivor decode is DV-filtered) and retires its vectors.
     """
-    from .encode import append_log_entry, committed_files
-
     io = _io(out_dir, io)
-    if committed_files(out_dir, io) is None:
-        raise ValueError("dv_delete_where requires a committed table (no _log found)")
+    snap = _table_snapshot(out_dir, io, "dv_delete_where")
     spec = read_table_spec(out_dir, io)
-
-    probe = decode_table(spark, out_dir, columns=condition_cols, io=io,
-                         chunk_filter=chunk_filter,
-                         meta_cols=["chunk_id", "__pos"])
-    hits = (probe.filter(condition).select("chunk_id", "__pos")
-            .localCheckpoint(eager=False))
-    total = hits.count()
+    total, chunks = _dv_probe(spark, out_dir, io, snap.version, condition,
+                              condition_cols, chunk_filter, "delete_where")
     if total == 0:
         return {"rows_deleted": 0, "chunks_touched": 0,
                 "dv_file": None, "log": None}
-    if total > DV_MAX_DELETED_ROWS:
-        raise ValueError(
-            f"predicate matches {total} rows "
-            f"(> DV_MAX_DELETED_ROWS={DV_MAX_DELETED_ROWS}); this is a broad "
-            "delete — use the copy-on-write delete_where instead"
-        )
-    rows = (
-        hits.groupBy("chunk_id")
-        .agg(F.sort_array(F.collect_list("__pos")).alias("pos"))
-        .collect()
-    )
-    chunks = {r["chunk_id"]: _pack_positions(np.asarray(r["pos"]))
-              for r in rows}
-    name = f"dv-{uuid.uuid4().hex[:12]}.json"
-    io.makedirs(io.join("_dv"))
-    io.publish_bytes(
-        io.join("_dv/" + name),
-        json.dumps({"chunks": chunks, "cardinality": total}).encode(),
-        attempt_tag=name[3:15],
-    )
-    log = append_log_entry(
-        out_dir,
-        [_meta_entry(spec), {"dv": {"dvFile": name, "cardinality": total}}],
-        io,
-    )
-    return {"rows_deleted": total, "chunks_touched": len(rows),
-            "dv_file": name, "log": log}
+    dv = _publish_dv(io, chunks, total)
+    log = _commit(out_dir, io, spec, snap.version, [dv])
+    return {"rows_deleted": total, "chunks_touched": len(chunks),
+            "dv_file": dv["dv"]["dvFile"], "log": log}
 
 
 def dv_update_where(spark: SparkSession, out_dir: str, condition,
@@ -2568,11 +2584,8 @@ def dv_update_where(spark: SparkSession, out_dir: str, condition,
     :func:`restore_table` undoes both halves (``dvRestore`` + file removes);
     a later compaction carries the vectors (chunk-id-keyed) verbatim.
     """
-    from .encode import append_log_entry, committed_files
-
     io = _io(out_dir, io)
-    if committed_files(out_dir, io) is None:
-        raise ValueError("dv_update_where requires a committed table (no _log found)")
+    snap = _table_snapshot(out_dir, io, "dv_update_where")
     spec = read_table_spec(out_dir, io)
     scols = {n: relax_nullable(_struct_col_type(tj))
              for n, tj in (spec.structs or {}).get("cols", {}).items()}
@@ -2585,35 +2598,19 @@ def dv_update_where(spark: SparkSession, out_dir: str, condition,
         raise ValueError(f"assigned columns not in table: {bad}")
     pds = pds or date(2026, 1, 1)
 
-    probe = decode_table(spark, out_dir, columns=condition_cols, io=io,
-                         chunk_filter=chunk_filter,
-                         meta_cols=["chunk_id", "__pos"])
-    hits = (probe.filter(condition).select("chunk_id", "__pos")
-            .localCheckpoint(eager=False))
-    total = hits.count()
+    total, chunks = _dv_probe(spark, out_dir, io, snap.version, condition,
+                              condition_cols, chunk_filter, "update_where")
     if total == 0:
         return {"rows_updated": 0, "chunks_touched": 0, "files_added": 0,
                 "dv_file": None, "log": None}
-    if total > DV_MAX_DELETED_ROWS:
-        raise ValueError(
-            f"predicate matches {total} rows "
-            f"(> DV_MAX_DELETED_ROWS={DV_MAX_DELETED_ROWS}); this is a broad "
-            "update — use the copy-on-write update_where instead"
-        )
-    pos_rows = (
-        hits.groupBy("chunk_id")
-        .agg(F.sort_array(F.collect_list("__pos")).alias("pos"))
-        .collect()
-    )
-    chunks = {r["chunk_id"]: _pack_positions(np.asarray(r["pos"]))
-              for r in pos_rows}
 
     # replacement rows: full decode of ONLY the touched chunks (every other
     # chunk's payload is never read), condition re-applied, assignments
     # evaluated against the pre-update row, routed like merge inserts
     run = f"du{uuid.uuid4().hex[:8]}"
     dec = decode_table(spark, out_dir, io=io,
-                       chunk_filter=F.col("chunk_id").isin(sorted(chunks)))
+                       chunk_filter=F.col("chunk_id").isin(sorted(chunks)),
+                       as_of=snap.version)
     updated = dec.filter(condition).select(
         *[
             assignments[name].cast(dtype).alias(name)
@@ -2625,22 +2622,11 @@ def dv_update_where(spark: SparkSession, out_dir: str, condition,
                             update_parts, pds, 0, out_dir, io)
     adds = _rewrite_job(routed, io, spec, chunk_rows, pds, run,
                         pds_from_col=True)
-
-    name = f"dv-{uuid.uuid4().hex[:12]}.json"
-    io.makedirs(io.join("_dv"))
-    io.publish_bytes(
-        io.join("_dv/" + name),
-        json.dumps({"chunks": chunks, "cardinality": total}).encode(),
-        attempt_tag=name[3:15],
-    )
-    log = append_log_entry(
-        out_dir,
-        [_meta_entry(spec)] + adds
-        + [{"dv": {"dvFile": name, "cardinality": total}}],
-        io,
-    )
-    return {"rows_updated": total, "chunks_touched": len(pos_rows),
-            "files_added": len(adds), "dv_file": name, "log": log}
+    dv = _publish_dv(io, chunks, total)
+    log = _commit(out_dir, io, spec, snap.version, adds + [dv])
+    return {"rows_updated": total, "chunks_touched": len(chunks),
+            "files_added": len(adds), "dv_file": dv["dv"]["dvFile"],
+            "log": log}
 
 
 def _route_inserts(spark: SparkSession, src_flat: DataFrame, spec: TableSpec,
@@ -2713,11 +2699,8 @@ def merge_table(spark: SparkSession, out_dir: str, source: DataFrame,
     ``append_log_entry`` so readers switch atomically. Untouched files are
     never rewritten.
     """
-    from .encode import append_log_entry, committed_files
-
     io = _io(out_dir, io)
-    if committed_files(out_dir, io) is None:
-        raise ValueError("merge_table requires a committed table (no _log found)")
+    snap = _table_snapshot(out_dir, io, "merge_table")
     spec = read_table_spec(out_dir, io)
     keys = spec.key_cols
     clause_mode = (when_matched_update is not None or when_matched_delete
@@ -2725,7 +2708,7 @@ def merge_table(spark: SparkSession, out_dir: str, source: DataFrame,
                    or when_not_matched_condition is not None)
     if clause_mode:
         return _merge_with_clauses(
-            spark, out_dir, source, io, spec, chunk_rows,
+            spark, out_dir, source, io, snap, spec, chunk_rows,
             pds or date(2026, 1, 1), insert_parts,
             when_matched_update, when_matched_delete,
             when_matched_condition, when_not_matched_condition,
@@ -2745,7 +2728,7 @@ def merge_table(spark: SparkSession, out_dir: str, source: DataFrame,
     src_keys = src.select(*keys).distinct()
 
     probe = decode_table(spark, out_dir, columns=list(keys), io=io,
-                         meta_cols=["__src_file"])
+                         meta_cols=["__src_file"], as_of=snap.version)
     matched, n_replaced = _dml_matched_files(
         probe.join(src_keys, list(keys), "left_semi")
     )
@@ -2758,19 +2741,16 @@ def merge_table(spark: SparkSession, out_dir: str, source: DataFrame,
     inserts = _route_inserts(spark, src, spec, insert_parts, pds,
                              len(matched), out_dir, io)
     if matched:
-        fp = _file_pds_map(out_dir, io)
-        part_map = spark.createDataFrame(
-            [(f, i, fp.get(f, pds)) for i, f in enumerate(matched)],
-            "__src_file string, part_id int, __pds date",
-        )
         # decode the FLAT physical lanes directly (keys are always scalar
         # lanes), matching the flattened source side of the union
         dec = decode_table(spark, out_dir, io=io,
                            columns=[f.name for f in spec.schema.fields],
                            meta_cols=["__src_file"],
-                           chunk_filter=F.col("__src_file").isin(matched))
+                           chunk_filter=F.col("__src_file").isin(matched),
+                           as_of=snap.version)
         survivors = (
-            dec.join(F.broadcast(part_map), "__src_file")
+            dec.join(F.broadcast(_rewrite_groups(spark, snap, matched, pds)),
+                     "__src_file")
             .join(src_keys, list(keys), "left_anti")
             .drop("__src_file")
         )
@@ -2779,18 +2759,14 @@ def merge_table(spark: SparkSession, out_dir: str, source: DataFrame,
         new_rows = inserts
     adds = _rewrite_job(new_rows, io, spec, chunk_rows, pds, run,
                         pds_from_col=True)
-    log = append_log_entry(
-        out_dir,
-        [_meta_entry(spec)] + adds
-        + [{"remove": {"path": f, "dataChange": True}} for f in matched],
-        io,
-    )
+    log = _commit(out_dir, io, spec, snap.version, adds + _removes(matched))
     return {"rows_replaced": n_replaced, "files_rewritten": len(adds),
             "files_removed": len(matched), "log": log}
 
 
 def _merge_with_clauses(spark: SparkSession, out_dir: str, source: DataFrame,
-                        io: FsIO, spec: TableSpec, chunk_rows: int,
+                        io: FsIO, snap: LogSnapshot, spec: TableSpec,
+                        chunk_rows: int,
                         pds: date, insert_parts: int,
                         upd: dict | None, delete: bool,
                         m_cond, i_cond) -> dict:
@@ -2798,8 +2774,6 @@ def _merge_with_clauses(spark: SparkSession, out_dir: str, source: DataFrame,
     transformed IN PLACE inside their files (update) or dropped (delete),
     unmatched-by-target source rows insert under ``i_cond``; one atomic
     add+remove log entry either way."""
-    from .encode import append_log_entry
-
     if upd is not None and delete:
         raise ValueError(
             "choose ONE matched action: when_matched_update or when_matched_delete")
@@ -2829,7 +2803,7 @@ def _merge_with_clauses(spark: SparkSession, out_dir: str, source: DataFrame,
     s = source.alias("s")
     src_keys = source.select(*keys).distinct()
     probe = decode_table(spark, out_dir, columns=list(keys), io=io,
-                         meta_cols=["__src_file"])
+                         meta_cols=["__src_file"], as_of=snap.version)
     have_matched_action = upd is not None or delete
     if have_matched_action:
         # Delta MERGE semantics: a target row matching multiple source rows
@@ -2873,7 +2847,8 @@ def _merge_with_clauses(spark: SparkSession, out_dir: str, source: DataFrame,
     new_rows = inserts
     if matched:
         dec = decode_table(spark, out_dir, io=io, meta_cols=["__src_file"],
-                           chunk_filter=F.col("__src_file").isin(matched))
+                           chunk_filter=F.col("__src_file").isin(matched),
+                           as_of=snap.version)
         t = dec.alias("t")
         join_cond = F.col(f"t.{keys[0]}").eqNullSafe(F.col(f"s.{keys[0]}"))
         for k in keys[1:]:
@@ -2900,13 +2875,9 @@ def _merge_with_clauses(spark: SparkSession, out_dir: str, source: DataFrame,
                     exprs.append(F.col(f"t.{c}").alias(c))
             result = joined.select(
                 *exprs, F.col("t.__src_file").alias("__src_file"))
-        fp = _file_pds_map(out_dir, io)
-        part_map = spark.createDataFrame(
-            [(f, i, fp.get(f, pds)) for i, f in enumerate(matched)],
-            "__src_file string, part_id int, __pds date",
-        )
         survivors = (_flat_for_rewrite(result, spec)
-                     .join(F.broadcast(part_map), "__src_file")
+                     .join(F.broadcast(_rewrite_groups(spark, snap, matched,
+                                                       pds)), "__src_file")
                      .drop("__src_file"))
         new_rows = (survivors if inserts is None
                     else survivors.unionByName(inserts))
@@ -2915,12 +2886,7 @@ def _merge_with_clauses(spark: SparkSession, out_dir: str, source: DataFrame,
                 "files_rewritten": 0, "files_removed": 0, "log": None}
     adds = _rewrite_job(new_rows, io, spec, chunk_rows, pds, run,
                         pds_from_col=True)
-    log = append_log_entry(
-        out_dir,
-        [_meta_entry(spec)] + adds
-        + [{"remove": {"path": f, "dataChange": True}} for f in matched],
-        io,
-    )
+    log = _commit(out_dir, io, spec, snap.version, adds + _removes(matched))
     return {"rows_matched": n_matched,
             "rows_deleted": n_action if delete else 0,
             "rows_updated": 0 if delete else n_action,
@@ -2946,11 +2912,8 @@ def update_where(spark: SparkSession, out_dir: str, condition,
     order; re-keying is a DELETE + MERGE). Only files holding matches are
     rewritten; every surviving byte of untouched files is untouched.
     """
-    from .encode import append_log_entry, committed_files
-
     io = _io(out_dir, io)
-    if committed_files(out_dir, io) is None:
-        raise ValueError("update_where requires a committed table (no _log found)")
+    snap = _table_snapshot(out_dir, io, "update_where")
     spec = read_table_spec(out_dir, io)
     # assignments address the table's ORIGINAL shape: a struct column is
     # assigned as a whole (produce the full struct value); leaf-level
@@ -2985,22 +2948,20 @@ def update_where(spark: SparkSession, out_dir: str, condition,
     pds = pds or date(2026, 1, 1)
 
     probe = decode_table(spark, out_dir, columns=condition_cols, io=io,
-                         chunk_filter=chunk_filter, meta_cols=["__src_file"])
+                         chunk_filter=chunk_filter, meta_cols=["__src_file"],
+                         as_of=snap.version)
     matched, n_updated = _dml_matched_files(probe.filter(condition))
     if not matched:
         return {"rows_updated": 0, "files_rewritten": 0,
                 "files_removed": 0, "log": None}
 
     run = f"up{uuid.uuid4().hex[:8]}"
-    fp = _file_pds_map(out_dir, io)
-    part_map = spark.createDataFrame(
-        [(f, i, fp.get(f, pds)) for i, f in enumerate(matched)],
-        "__src_file string, part_id int, __pds date",
-    )
     dec = decode_table(spark, out_dir, io=io, meta_cols=["__src_file"],
-                       chunk_filter=F.col("__src_file").isin(matched))
+                       chunk_filter=F.col("__src_file").isin(matched),
+                       as_of=snap.version)
     hit = F.coalesce(condition, F.lit(False))
-    updated = dec.join(F.broadcast(part_map), "__src_file").select(
+    groups = _rewrite_groups(spark, snap, matched, pds)
+    updated = dec.join(F.broadcast(groups), "__src_file").select(
         *[
             F.when(hit, assignments[name]).otherwise(F.col(name))
             .cast(dtype).alias(name)
@@ -3012,12 +2973,7 @@ def update_where(spark: SparkSession, out_dir: str, condition,
     )
     adds = _rewrite_job(_flat_for_rewrite(updated, spec), io, spec,
                         chunk_rows, pds, run, pds_from_col=True)
-    log = append_log_entry(
-        out_dir,
-        [_meta_entry(spec)] + adds
-        + [{"remove": {"path": f, "dataChange": True}} for f in matched],
-        io,
-    )
+    log = _commit(out_dir, io, spec, snap.version, adds + _removes(matched))
     return {"rows_updated": n_updated, "files_rewritten": len(adds),
             "files_removed": len(matched), "log": log}
 
@@ -3049,19 +3005,16 @@ def recluster_table(spark: SparkSession, out_dir: str, by: list[str],
     ``by[0]`` must be a non-null numeric/date column (quantile bucketing);
     remaining ``by`` columns refine the within-chunk sort only.
     """
-    from .encode import append_log_entry, committed_files
-
     io = _io(out_dir, io)
-    live = committed_files(out_dir, io)
-    if live is None:
-        raise ValueError("recluster_table requires a committed table (no _log found)")
+    snap = _table_snapshot(out_dir, io, "recluster_table")
+    live = snap.files
     spec = read_table_spec(out_dir, io)
     names = {f.name for f in spec.schema.fields}
     missing = sorted(set(by) - names)
     if not by or missing:
         raise ValueError(f"cluster columns not in table: {missing or by}")
-    live_pds = sorted({d for f, d in _file_pds_map(out_dir, io).items()
-                       if f in set(live)})
+    live_pds = sorted({d for a in snap.adds.values()
+                       if (d := _file_pds(a)) is not None})
     if len(live_pds) > 1:
         raise ValueError(
             "recluster_table does not support date-partitioned tables "
@@ -3071,7 +3024,7 @@ def recluster_table(spark: SparkSession, out_dir: str, by: list[str],
     # a single-date table keeps ITS date through the rewrite
     pds = pds or (live_pds[0] if live_pds else date(2026, 1, 1))
 
-    dec = decode_table(spark, out_dir, io=io)
+    dec = decode_table(spark, out_dir, io=io, as_of=snap.version)
     probs = [i / n_parts for i in range(1, n_parts)]
     bounds = sorted(set(
         dec.select(F.col(by[0]).cast("double").alias("__c"))
@@ -3084,12 +3037,7 @@ def recluster_table(spark: SparkSession, out_dir: str, by: list[str],
     clustered = dec.withColumn("part_id", part_expr.cast("int"))
     adds = _rewrite_job(clustered, io, spec, chunk_rows, pds, run,
                         sort_cols=list(by))
-    log = append_log_entry(
-        out_dir,
-        [_meta_entry(spec)] + adds
-        + [{"remove": {"path": f, "dataChange": True}} for f in live],
-        io,
-    )
+    log = _commit(out_dir, io, spec, snap.version, adds + _removes(live))
     return {"files_before": len(live), "files_after": len(adds),
             "buckets": len(bounds) + 1, "log": log}
 
@@ -3111,10 +3059,9 @@ def table_diff(spark: SparkSession, out_dir: str,
     rewrites (``dataChange: false``) are content-neutral and correctly
     produce an empty diff.
     """
-    from .encode import log_versions
-
     io = _io(out_dir, io)
-    versions = log_versions(out_dir, io)
+    log = encode.CommitLog(io)
+    versions = log.versions
     if to_version is None:
         to_version = max(versions)
     if from_version not in versions or to_version not in versions:
@@ -3123,32 +3070,19 @@ def table_diff(spark: SparkSession, out_dir: str,
         raise ValueError("from_version must be <= to_version")
 
     # replay only the in-range entries to classify the change shape
-    log_dir = io.join("_log")
-    added: list[str] = []
     removed = False
     data_change_adds: list[str] = []
-    for f in sorted(io.listdir(log_dir)):
-        if not f.endswith(".json"):
-            continue
-        idx = int(f[:-5])
-        if idx <= from_version or idx > to_version:
-            continue
-        for line in io.read_text(posixpath.join(log_dir, f)).splitlines():
-            entry = json.loads(line)
-            if "add" in entry:
-                added.append(entry["add"]["path"])
-                if entry["add"].get("dataChange", True):
-                    data_change_adds.append(entry["add"]["path"])
-            if "remove" in entry and entry["remove"].get("dataChange", True):
-                removed = True
-            if "dv" in entry or "dvRestore" in entry:
-                # a deletion vector (or its restore) changed existing files'
-                # visible rows: the range is not append-only
-                removed = True
+    for _, entry in log.entries(since=from_version, as_of=to_version):
+        if "add" in entry and entry["add"].get("dataChange", True):
+            data_change_adds.append(entry["add"]["path"])
+        if "remove" in entry and entry["remove"].get("dataChange", True):
+            removed = True
+        if "dv" in entry or "dvRestore" in entry:
+            # a deletion vector (or its restore) changed existing files'
+            # visible rows: the range is not append-only
+            removed = True
 
-    from .encode import committed_files
-
-    live_now = set(committed_files(out_dir, io, as_of=to_version))
+    live_now = log.snapshot(to_version).adds
     if not removed and all(f in live_now for f in data_change_adds):
         # append-only range with every added file still live: the diff IS
         # those files (log-tail contract, same axis the streaming source
@@ -3321,22 +3255,15 @@ def restore_table(out_dir: str, version: int, io: FsIO | None = None) -> dict:
     history is preserved (``as_of`` reads of intermediate versions still
     work, and the restore itself is a new version that can be restored
     away). Raises if any needed file has already been vacuumed."""
-    from .encode import (append_log_entry, committed_dv_actions,
-                         committed_files, read_commit_log)
-
     io = _io(out_dir, io)
-    cur = committed_files(out_dir, io)
-    old = committed_files(out_dir, io, as_of=version)
-    dv_target = committed_dv_actions(out_dir, io, as_of=version)
-    dv_changed = committed_dv_actions(out_dir, io) != dv_target
-    if cur is None or old is None:
-        raise ValueError("restore_table requires a committed table (no _log found)")
-    add_records = {
-        e["add"]["path"]: e["add"] for e in read_commit_log(out_dir, io)
-        if "add" in e
-    }
-    re_add = sorted(set(old) - set(cur))
-    remove = sorted(set(cur) - set(old))
+    snap = _table_snapshot(out_dir, io, "restore_table")
+    # the target version's add records are the original ones, checkpointed
+    # or not
+    old = log_snapshot(out_dir, io, as_of=version)
+    dv_target = old.dvs
+    dv_changed = snap.dvs != dv_target
+    re_add = sorted(old.adds.keys() - snap.adds.keys())
+    remove = sorted(snap.adds.keys() - old.adds.keys())
     data_dir = io.join("data")
     gone = [f for f in re_add
             if not io.exists(posixpath.join(data_dir, f))]
@@ -3356,14 +3283,12 @@ def restore_table(out_dir: str, version: int, io: FsIO | None = None) -> dict:
         return {"restored_to": version, "files_readded": 0,
                 "files_removed": 0, "log": None}
     spec = read_table_spec(out_dir, io)
-    log = append_log_entry(
-        out_dir,
-        [_meta_entry(spec)]
-        + [{"add": dict(add_records[f], dataChange=True)} for f in re_add]
-        + [{"remove": {"path": f, "dataChange": True}} for f in remove]
+    log = _commit(
+        out_dir, io, spec, snap.version,
+        [{"add": dict(old.adds[f], dataChange=True)} for f in re_add]
+        + _removes(remove)
         + ([{"dvRestore": {"asOf": version, "keep": dv_target}}]
            if dv_changed else []),
-        io,
     )
     return {"restored_to": version, "files_readded": len(re_add),
             "files_removed": len(remove), "log": log}
@@ -3380,19 +3305,14 @@ def clone_table(src_dir: str, dst_dir: str, as_of: int | None = None,
     never touch the other. File bytes stream through FsIO (works across
     filesystems); sizes/hashes are carried from the source's add records —
     commit never re-reads what it just wrote."""
-    from .encode import append_log_entry, committed_files, read_commit_log
-
     src_io = _io(src_dir, src_io)
     dst_io = _io(dst_dir, dst_io)
-    live = committed_files(src_dir, src_io, as_of=as_of)
-    if live is None:
+    snap = log_snapshot(src_dir, src_io, as_of=as_of)
+    if snap is None:
         raise ValueError("clone_table requires a committed source (no _log found)")
     if dst_io.isdir(dst_io.join("_log")):
         raise ValueError(f"clone destination {dst_dir!r} already has a table")
-    add_records = {
-        e["add"]["path"]: e["add"] for e in read_commit_log(src_dir, src_io)
-        if "add" in e
-    }
+    live = snap.files
     spec = read_table_spec(src_dir, src_io)
     dst_io.makedirs(dst_io.join("data"))
     tag = uuid.uuid4().hex[:8]
@@ -3404,24 +3324,19 @@ def clone_table(src_dir: str, dst_dir: str, as_of: int | None = None,
         dst_io.publish_bytes(posixpath.join(dst_data, f), data, attempt_tag=tag)
     # deletion-vector state travels with the clone: copy the live dv files
     # and re-commit their actions in the clone's version 0
-    from .encode import committed_dv_actions
-
-    dv_actions = committed_dv_actions(src_dir, src_io, as_of=as_of)
-    if dv_actions:
+    if snap.dvs:
         dst_io.makedirs(dst_io.join("_dv"))
-        for a in dv_actions:
+        for a in snap.dvs:
             dst_io.publish_bytes(
                 posixpath.join(dst_io.join("_dv"), a["dvFile"]),
                 src_io.read_text(
                     posixpath.join(src_io.join("_dv"), a["dvFile"])).encode(),
                 attempt_tag=tag,
             )
-    log = append_log_entry(
-        dst_dir,
-        [_meta_entry(spec)]
-        + [{"add": dict(add_records[f], dataChange=True)} for f in live]
+    log = _commit(
+        dst_dir, dst_io, spec, -1,
+        [{"add": dict(snap.adds[f], dataChange=True)} for f in live]
         + [{"dv": {"dvFile": a["dvFile"], "cardinality": a["cardinality"]}}
-           for a in dv_actions],
-        dst_io,
+           for a in snap.dvs],
     )
     return {"files_cloned": len(live), "log": log}

@@ -211,16 +211,20 @@ class PandoraTableDataSource(DataSource):
     def writer(self, schema: T.StructType, overwrite: bool) -> "PandoraTableWriter":
         import uuid
 
-        from ..operators.encode import committed_files
+        from ..operators.encode import CommitLog
 
         path, io, spec = self._sink_spec(schema)
-        prev_live = committed_files(path, io) if overwrite else None
+        # the commit is planned from this read: an overwrite removes exactly
+        # the files live here, and any conflicting commit since fails it
+        log = CommitLog(io)
+        snap = log.snapshot() if overwrite else None
         return PandoraTableWriter(
             path=path,
             spec_json=spec.to_json(),
             run="w" + uuid.uuid4().hex[:10],
             chunk_rows=int(self.options.get("chunk_rows", "65536")),
-            prev_live=prev_live or [],
+            prev_live=snap.files if snap else [],
+            read_version=snap.version if snap else log.version,
         )
 
     def streamWriter(self, schema: T.StructType,
@@ -569,12 +573,13 @@ class PandoraTableWriter(DataSourceArrowWriter):
     fresh directory."""
 
     def __init__(self, path: str, spec_json: str, run: str,
-                 chunk_rows: int, prev_live: list[str]):
+                 chunk_rows: int, prev_live: list[str], read_version: int):
         self._path = path
         self._spec_json = spec_json
         self._run = run
         self._chunk_rows = chunk_rows
         self._prev_live = prev_live
+        self._read_version = read_version
 
     def write(self, iterator: Iterator[Any]) -> _FileCommit:
         return _encode_partition_task(
@@ -582,34 +587,13 @@ class PandoraTableWriter(DataSourceArrowWriter):
         )
 
     def commit(self, messages) -> None:
-        from ..operators.encode import PROTOCOL, append_log_entry
-        from ..operators.table import TableSpec, _io, chunk_schema_for
+        from ..operators import encode
 
-        adds = [m for m in messages if m is not None and m.file_name]
-        spec = TableSpec.from_json(self._spec_json)
-        io = _io(self._path, None)
-        lines: list[dict] = [
-            {"protocol": PROTOCOL},
-            {"metaData": {
-                "schemaString": chunk_schema_for(spec).json(),
-                "partitionColumns": ["pds"],
-                "format": {"provider": "parquet"},
-            }},
-        ]
-        for m in adds:
-            lines.append({"add": {
-                "path": m.file_name,
-                "size": m.file_size,
-                "sha256": m.file_sha,
-                "partitionValues": {"pds": "2026-01-01"},
-                "dataChange": True,
-                "modificationTime": io.mtime_ms(
-                    io.join("data/" + m.file_name)),
-            }})
-        lines += [{"remove": {"path": f, "dataChange": True}}
-                  for f in self._prev_live]
+        lines = _sink_lines(self._path, self._spec_json, messages,
+                            self._prev_live)
         if len(lines) > 2:
-            append_log_entry(self._path, lines)
+            encode.append_log_entry(self._path, lines, None,
+                                    self._read_version)
 
     def abort(self, messages) -> None:
         import posixpath
@@ -626,41 +610,57 @@ class PandoraTableWriter(DataSourceArrowWriter):
                     pass  # vacuum() reclaims whatever abort could not reach
 
 
-def _last_txn_version(path: str, app_id: str) -> int | None:
-    """Highest committed streaming-epoch version for ``app_id`` per the
-    commit log's ``txn`` lines (the Delta SetTransaction idempotence axis,
-    ``DeltaLake.fs:176-444`` contract). None when the app never committed."""
-    import json as _json
-    import posixpath
-
-    from ..operators.table import _io
+def _sink_lines(path: str, spec_json: str, messages,
+                prev_live: list[str]) -> list[dict]:
+    """A sink commit's lines: protocol, metaData, one add per published
+    file, one remove per ``prev_live`` file (overwrite)."""
+    from ..operators.encode import PROTOCOL, _meta_entry
+    from ..operators.table import TableSpec, _io, chunk_schema_for
 
     io = _io(path, None)
-    log_dir = io.join("_log")
-    if not io.isdir(log_dir):
-        return None
-    # an app's txn versions are monotone in log order (each commit carries
-    # its batchId), so the NEWEST entry with a txn line for this app is the
-    # max — scan newest-first and stop at the first hit, keeping per-epoch
-    # commit cost O(entries since the app's last commit), not O(log)
-    for f in sorted(io.listdir(log_dir), reverse=True):
-        if not f.endswith(".json"):
-            continue
-        for line in io.read_text(posixpath.join(log_dir, f)).splitlines():
-            txn = _json.loads(line).get("txn")
-            if txn and txn.get("appId") == app_id:
-                return int(txn["version"])
-    # no hit in the json tail: a checkpoint (possibly taken with clean=True)
-    # may hold the app's latest txn line in its collapsed state
-    from ..operators.encode import read_log_checkpoint
+    spec = TableSpec.from_json(spec_json)
+    lines = [{"protocol": PROTOCOL},
+             _meta_entry(chunk_schema_for(spec).json())]
+    for m in messages:
+        if m is not None and m.file_name:
+            lines.append({"add": {
+                "path": m.file_name,
+                "size": m.file_size,
+                "sha256": m.file_sha,
+                "partitionValues": {"pds": "2026-01-01"},
+                "dataChange": True,
+                "modificationTime": io.mtime_ms(
+                    io.join("data/" + m.file_name)),
+            }})
+    return lines + [{"remove": {"path": f, "dataChange": True}}
+                    for f in prev_live]
 
-    ckpt = read_log_checkpoint(path, io)
-    if ckpt is not None:
-        for entry in ckpt[1]:
-            txn = entry.get("txn")
-            if txn and txn.get("appId") == app_id:
-                return int(txn["version"])
-    return None
+
+def _txn_state(path: str, app_id: str) -> tuple[int | None, int]:
+    """(highest committed streaming-epoch version for ``app_id`` or None,
+    log version read) per the commit log's ``txn`` lines (the Delta
+    SetTransaction idempotence axis, ``DeltaLake.fs:176-444`` contract).
+
+    An app's txn versions are monotone in log order (each commit carries
+    its batchId), so the NEWEST entry with a txn line for this app is the
+    max — the replay runs newest-first and stops at the first hit, keeping
+    per-epoch commit cost O(entries since the app's last commit), not
+    O(log); the checkpoint's collapsed txn lines come last."""
+    from ..operators.encode import CommitLog
+    from ..operators.table import _io
+
+    log = CommitLog(_io(path, None))
+    for _, entry in log.entries(newest_first=True):
+        txn = entry.get("txn")
+        if txn and txn.get("appId") == app_id:
+            return int(txn["version"]), log.version
+    return None, log.version
+
+
+def _last_txn_version(path: str, app_id: str) -> int | None:
+    """Highest committed streaming-epoch version for ``app_id``; None when
+    the app never committed."""
+    return _txn_state(path, app_id)[0]
 
 
 class PandoraTableStreamWriter(DataSourceStreamArrowWriter):
@@ -714,44 +714,23 @@ class PandoraTableStreamWriter(DataSourceStreamArrowWriter):
                     pass  # vacuum() reclaims stragglers
 
     def commit(self, messages, batchId: int) -> None:
-        from ..operators.encode import (
-            PROTOCOL, append_log_entry, committed_files,
-        )
-        from ..operators.table import TableSpec, _io, chunk_schema_for
+        from ..operators import encode
 
-        last = _last_txn_version(self._path, self._app_id)
+        last, read_version = _txn_state(self._path, self._app_id)
         if last is not None and last >= batchId:
             # replayed epoch: the original commit stands; this attempt's
             # files are orphans — reclaim them now
             self._drop_files(messages)
             return
-        adds = [m for m in messages if m is not None and m.file_name]
-        spec = TableSpec.from_json(self._spec_json)
-        io = _io(self._path, None)
-        lines: list[dict] = [
-            {"protocol": PROTOCOL},
-            {"metaData": {
-                "schemaString": chunk_schema_for(spec).json(),
-                "partitionColumns": ["pds"],
-                "format": {"provider": "parquet"},
-            }},
-            {"txn": {"appId": self._app_id, "version": batchId}},
-        ]
-        prev_live = committed_files(self._path, io) if self._overwrite else None
-        for m in adds:
-            lines.append({"add": {
-                "path": m.file_name,
-                "size": m.file_size,
-                "sha256": m.file_sha,
-                "partitionValues": {"pds": "2026-01-01"},
-                "dataChange": True,
-                "modificationTime": io.mtime_ms(
-                    io.join("data/" + m.file_name)),
-            }})
-        lines += [{"remove": {"path": f, "dataChange": True}}
-                  for f in (prev_live or [])]
+        prev_live: list[str] = []
+        if self._overwrite:
+            snap = encode.log_snapshot(self._path)
+            if snap is not None:
+                prev_live, read_version = snap.files, snap.version
+        lines = _sink_lines(self._path, self._spec_json, messages, prev_live)
         # the txn line makes even an empty epoch a commit: replay stays gated
-        append_log_entry(self._path, lines)
+        lines.insert(2, {"txn": {"appId": self._app_id, "version": batchId}})
+        encode.append_log_entry(self._path, lines, None, read_version)
 
     def abort(self, messages, batchId: int) -> None:
         self._drop_files(messages)
@@ -789,26 +768,13 @@ class PandoraTableStreamReader(DataSourceStreamReader):
         return {"version": vs[-1] if vs else -1}
 
     def _added_files(self, start_v: int, end_v: int) -> list[str]:
-        import json as _json
-        import posixpath
-
+        from ..operators.encode import CommitLog
         from ..operators.table import _io
 
-        io = _io(self._path, None)
-        log_dir = io.join("_log")
-        files: list[str] = []
-        for f in sorted(io.listdir(log_dir)):
-            if not f.endswith(".json"):
-                continue
-            v = int(f[:-5])
-            if v <= start_v or v > end_v:
-                continue
-            for line in io.read_text(posixpath.join(log_dir, f)).splitlines():
-                entry = _json.loads(line)
-                add = entry.get("add")
-                if add and add.get("dataChange", True):
-                    files.append(add["path"])
-        return files
+        log = CommitLog(_io(self._path, None))
+        return [e["add"]["path"]
+                for _, e in log.entries(since=start_v, as_of=end_v)
+                if "add" in e and e["add"].get("dataChange", True)]
 
     def partitions(self, start: dict, end: dict):
         files = self._added_files(int(start["version"]), int(end["version"]))

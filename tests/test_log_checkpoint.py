@@ -116,3 +116,66 @@ def test_txn_lookup_survives_clean_checkpoint(spark, out_dir, tmp_path):
     checkpoint_log(out_dir, clean=True)
     # the collapsed txn line still gates epoch replay
     assert _last_txn_version(out_dir, "ckpt-app") == last
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_clone_after_clean_checkpoint(spark, out_dir, tmp_path):
+    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.table import (
+        clone_table,
+    )
+
+    for i in range(3):
+        _append(spark, out_dir, i * 100, (i + 1) * 100, run=f"r{i}")
+    checkpoint_log(out_dir, clean=True)
+    dst = str(tmp_path / "clone")
+    res = clone_table(out_dir, dst)
+    assert res["files_cloned"] == len(committed_files(out_dir))
+    assert _rows(decode_table(spark, dst)) == _rows(decode_table(spark, out_dir))
+
+
+def test_compact_below_every_file_size_after_clean_checkpoint_is_noop(
+        spark, out_dir):
+    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.table import (
+        compact_table,
+    )
+
+    for i in range(2):
+        _append(spark, out_dir, i * 100, (i + 1) * 100, run=f"r{i}")
+    checkpoint_log(out_dir, clean=True)
+    live = committed_files(out_dir)
+    assert len(live) > 1
+    _, entries = read_log_checkpoint(out_dir)
+    smallest = min(e["add"]["size"] for e in entries if "add" in e)
+    res = compact_table(out_dir, max_group_bytes=smallest - 1)
+    assert res == {"files_before": len(live), "files_after": len(live),
+                   "log": None}
+    assert committed_files(out_dir) == live
+
+
+def test_restore_to_clean_checkpoint_readds_original_records(spark, out_dir):
+    import json
+
+    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.table import (
+        compact_table,
+        restore_table,
+    )
+
+    for i in range(3):
+        _append(spark, out_dir, i * 100, (i + 1) * 100, run=f"r{i}")
+    expected = _rows(decode_table(spark, out_dir))
+    info = checkpoint_log(out_dir, clean=True)
+    _, entries = read_log_checkpoint(out_dir)
+    originals = {e["add"]["path"]: e["add"] for e in entries if "add" in e}
+    compact_table(out_dir)  # every original file leaves the live set
+    assert not set(committed_files(out_dir)) & set(originals)
+
+    res = restore_table(out_dir, info["version"])
+    assert res["files_readded"] == len(originals)
+    with open(res["log"]) as fh:
+        readded = [e["add"] for e in map(json.loads, fh) if "add" in e]
+    assert {a["path"]: a for a in readded} == {
+        p: dict(a, dataChange=True) for p, a in originals.items()}
+    assert _rows(decode_table(spark, out_dir)) == expected

@@ -159,3 +159,35 @@ def test_datasource_sink_rejects_pds_table(spark, tmp_path):
     encode_table(df, out, key_cols=["id"], pds_col="d", n_parts=2)
     with pytest.raises(Exception, match="date-partitioned"):
         (df.write.format("pandora_table").mode("append").save(out))
+
+
+def test_cow_delete_after_clean_checkpoint_keeps_file_date(spark, tmp_path):
+    """A clean checkpoint leaves the add records only in the checkpoint; a
+    CoW rewrite must still find its file's partition date there. Restamping
+    the run default instead makes pds-pruned reads drop the rewritten rows."""
+    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.encode import (
+        checkpoint_log,
+        committed_files,
+    )
+    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.table import (
+        delete_where,
+    )
+
+    out = str(tmp_path / "tbl")
+    df = spark.range(3000).select(
+        F.col("id").alias("k"),
+        F.expr("date_add(date'2024-03-01', cast(id % 3 as int))").alias("day"),
+    )
+    encode_table(df, out, key_cols=["k"], n_parts=2, chunk_rows=256,
+                 pds_col="day")
+    checkpoint_log(out, clean=True)
+    before = set(committed_files(out))
+    res = delete_where(spark, out, F.col("k") == 1, condition_cols=["k"])
+    assert res["rows_deleted"] == 1
+    rewritten = [e["add"] for e in read_commit_log(out)
+                 if "add" in e and e["add"]["path"] not in before]
+    assert rewritten
+    assert {a["partitionValues"]["pds"] for a in rewritten} == {"2024-03-02"}
+    pruned = decode_table(
+        spark, out, chunk_filter=F.col("pds") == F.lit(date(2024, 3, 2)))
+    assert pruned.count() == 999
