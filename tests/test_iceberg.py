@@ -5,8 +5,10 @@ Covered: snapshot round-trip, plan-time partition pruning from manifest
 entries, append + time travel (by snapshot id and by timestamp), positional
 merge-on-read deletes (subtraction, composition, older snapshots untouched,
 zero data-file rewrites), the pre-tokenized-sequence schema (array<int>
-tokens — the north-star input shape), metadata-layout shape checks, and the
-error paths (not-a-table, unknown snapshot, fully-pruned scan)."""
+tokens — the north-star input shape), metadata-layout shape checks, the
+error paths (not-a-table, unknown snapshot, no current snapshot), a
+fully-pruned scan (empty, with the snapshot's schema), and sequence-number
+inheritance on a hand-built manifest."""
 
 import json
 import os
@@ -154,10 +156,105 @@ def test_metadata_layout_is_spec_shaped(spark, tmp_path):
 def test_error_paths(spark, tmp_path):
     with pytest.raises(ValueError, match="not an Iceberg table"):
         read_iceberg(spark, str(tmp_path / "nope"))
+
+
+def test_fully_pruned_scan_reads_empty(spark, tmp_path):
     d = str(tmp_path / "t")
     write_iceberg(_docs(spark, n=50), d, partition_by="source")
-    with pytest.raises(ValueError, match="empty"):
-        read_iceberg(spark, d, partition_filter=lambda p: False)
+    empty = read_iceberg(spark, d, partition_filter=lambda p: False)
+    assert empty.count() == 0
+    assert [(f.name, f.dataType) for f in empty.schema] == \
+        [(f.name, f.dataType) for f in read_iceberg(spark, d).schema]
+    cols = read_iceberg(spark, d, columns=["v", "doc_id"],
+                        partition_filter=lambda p: False)
+    assert cols.columns == ["v", "doc_id"] and cols.count() == 0
+
+
+def _hand_built_table(d, entries, seq=9):
+    """A one-snapshot table written by hand: snapshot and manifest at
+    sequence number ``seq``, one manifest entry per ``(status,
+    sequence_number, file name)``; the data files exist but are empty."""
+    from pandora_apache_avro_idl_to_apache_parquet_spark.sources.avro_binary import (
+        write_avro_container,
+    )
+    from pandora_apache_avro_idl_to_apache_parquet_spark.sources.iceberg import (
+        _manifest_schemas,
+    )
+
+    for sub in ("metadata", "data"):
+        os.makedirs(os.path.join(d, sub))
+    ml_schema, entry_schema = _manifest_schemas([])
+    recs = []
+    for status, e_seq, name in entries:
+        path = os.path.join(d, "data", name)
+        open(path, "w").close()
+        recs.append({"status": status, "snapshot_id": seq, "sequence_number": e_seq,
+                     "data_file": {"content": 0, "file_path": path,
+                                   "file_format": "PARQUET", "partition": {},
+                                   "record_count": 1, "file_size_in_bytes": 1,
+                                   "lower_bounds": None, "upper_bounds": None}})
+    man = os.path.join(d, "metadata", "m0.avro")
+    write_avro_container(man, entry_schema, recs)
+    ml = os.path.join(d, "metadata", f"snap-{seq}.avro")
+    write_avro_container(ml, ml_schema, [{
+        "manifest_path": man, "manifest_length": os.path.getsize(man),
+        "partition_spec_id": 0, "content": 0, "sequence_number": seq,
+        "min_sequence_number": 0, "added_snapshot_id": seq,
+        "added_files_count": len(recs), "existing_files_count": 0,
+        "deleted_files_count": 0, "added_rows_count": len(recs),
+        "existing_rows_count": 0, "deleted_rows_count": 0}])
+    meta = {
+        "format-version": 2, "current-schema-id": 0,
+        "schemas": [{"schema-id": 0, "type": "struct", "fields": [
+            {"id": 1, "name": "doc_id", "required": False, "type": "long"}]}],
+        "snapshots": [{"snapshot-id": seq, "sequence-number": seq,
+                       "timestamp-ms": 1700000000000, "manifest-list": ml,
+                       "summary": {"operation": "append"}, "schema-id": 0}],
+        "current-snapshot-id": seq, "last-sequence-number": seq,
+    }
+    with open(os.path.join(d, "metadata", "v1.metadata.json"), "w") as fh:
+        json.dump(meta, fh)
+    return meta
+
+
+@pytest.mark.parametrize("current", [None, -1], ids=["missing", "minus-one"])
+def test_missing_current_snapshot_fails_loudly(tmp_path, current):
+    d = str(tmp_path / "t")
+    meta = _hand_built_table(d, [(1, None, "a.parquet")])
+    if current is None:
+        del meta["current-snapshot-id"]
+    else:
+        meta["current-snapshot-id"] = current
+    with open(os.path.join(d, "metadata", "v2.metadata.json"), "w") as fh:
+        json.dump(meta, fh)
+    with pytest.raises(ValueError, match="no current snapshot"):
+        scan_manifests(d)
+    # an explicit snapshot still reads
+    assert len(scan_manifests(d, snapshot_id=9)["data_files"]) == 1
+
+
+def test_sequence_number_inheritance(tmp_path):
+    """Only an ADDED entry whose sequence number is null inherits the
+    manifest's; an explicit 0 stays 0, and a null on an EXISTING entry (a
+    v1 manifest's) reads as 0."""
+    from pandora_apache_avro_idl_to_apache_parquet_spark.sources.iceberg import (
+        _iceberg_stream_classes,
+    )
+
+    d = str(tmp_path / "t")
+    _hand_built_table(d, [(1, 0, "added_zero.parquet"), (1, None, "added_null.parquet"),
+                          (0, 3, "existing_three.parquet"),
+                          (0, None, "existing_null.parquet")])
+    seqs = {os.path.basename(f["file_path"]): f["_seq"]
+            for f in scan_manifests(d)["data_files"]}
+    assert seqs == {"added_zero.parquet": 0, "added_null.parquet": 9,
+                    "existing_three.parquet": 3, "existing_null.parquet": 0}
+    # the streaming source emits at sequence 9 only the file added at 9
+    source = _iceberg_stream_classes()(options={"path": d})
+    reader = source.streamReader(source.schema())
+    emitted = [os.path.basename(p.value)
+               for p in reader.partitions({"seq": 8}, {"seq": 9})]
+    assert emitted == ["added_null.parquet"]
 
 
 def test_equality_delete_sequence_semantics(spark, tmp_path):
