@@ -812,19 +812,27 @@ def read_manifest(spark: SparkSession, out_dir: str, io: FsIO | None = None) -> 
     return read_chunks(spark, out_dir, io).select(*MANIFEST_COLUMNS)
 
 
-def read_chunks(spark: SparkSession, out_dir: str, io: FsIO | None = None) -> DataFrame:
-    """Log-gated chunk-file scan: when a commit log exists, exactly the files
-    it references as live are read (half-published crash leftovers and
-    compacted-away files are invisible); directory listing is the fallback
-    for pre-commit state. The DataFrame read itself goes through Spark's own
-    Hadoop connectors (pass URIs for cluster stores)."""
+def live_data_files(out_dir: str, io: FsIO | None = None) -> list[str]:
+    """Basenames under ``data/`` that a reader sees: exactly the files the
+    commit log references as live (half-published crash leftovers and
+    compacted-away files are invisible), or the directory listing when no
+    log exists yet (pre-commit state)."""
     io = _io(out_dir, io)
-    d = io.join("data")
     live = committed_files(out_dir, io)
     if live is None:
-        live = [f for f in io.listdir(d) if f.endswith(".parquet")]
+        live = [f for f in io.listdir(io.join("data")) if f.endswith(".parquet")]
+    return live
+
+
+def read_chunks(spark: SparkSession, out_dir: str, io: FsIO | None = None) -> DataFrame:
+    """Log-gated chunk-file scan of :func:`live_data_files` under the chunk
+    schema (passed explicitly, so no schema-inference job runs; Spark's file
+    sources relax it to nullable as inference would). The DataFrame read
+    itself goes through Spark's own Hadoop connectors (pass URIs for cluster
+    stores)."""
+    live = live_data_files(out_dir, io)
     if not live:
         # empty input produced no chunk files: empty frame with the chunk schema
         return spark.createDataFrame([], CHUNK_SCHEMA)
     base = out_dir.rstrip("/") + "/data/"
-    return spark.read.parquet(*[base + f for f in live])
+    return spark.read.schema(CHUNK_SCHEMA).parquet(*[base + f for f in live])

@@ -325,9 +325,10 @@ FROM toks
 
 
 def q_doc_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Selective decode (point lookup): fetch five specific documents through
-    the manifest's doc_id_min/doc_id_max zone map — chunks outside the range
-    are pruned at the parquet scan, their payloads never read
+    """Selective decode (point lookup): fetch five specific documents in the
+    driver, with no Spark job — the doc_id_min/doc_id_max zone map drops
+    chunks that cannot hold an id, only the doc_id streams of the rest are
+    probed, and only chunks with a hit are fully decoded
     (``operators/decode.py:lookup_docs``)."""
     from .operators.decode import lookup_docs
 

@@ -44,6 +44,7 @@ from __future__ import annotations
 
 import json
 import posixpath
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -364,6 +365,14 @@ def _iceberg_schema_json(schema: T.StructType) -> dict:
                            "required": not f.nullable, "type": t})
     fields = out_fields
     return {"type": "struct", "schema-id": 0, "fields": fields}
+
+
+def _max_column_id(fields: list[dict]) -> int:
+    """Highest field or list-element id: what ``last-column-id`` must be."""
+    return max([f["id"] for f in fields]
+               + [f["type"]["element-id"] for f in fields
+                  if isinstance(f["type"], dict) and "element-id" in f["type"]],
+               default=0)
 
 
 def _avro_part_type(dt: T.DataType) -> object:
@@ -746,12 +755,19 @@ def _evolve_schema(meta: dict, schema: T.StructType) -> dict:
     if not added:
         return meta
     # added columns are recorded OPTIONAL regardless of the incoming
-    # frame's nullability: pre-evolution files serve them as null
-    next_id = meta.get("last-column-id", len(cur_by_name))
+    # frame's nullability: pre-evolution files serve them as null. Their
+    # field and element ids continue after every id ever assigned (tables
+    # written before last-column-id counted element ids under-report it)
+    next_id = max([meta.get("last-column-id", 0)]
+                  + [_max_column_id(sc["fields"]) for sc in meta["schemas"]])
     fields = list(cur["fields"])
     for f in added:
         next_id += 1
-        fields.append(dict(f, id=next_id, required=False))
+        nf = dict(f, id=next_id, required=False)
+        if isinstance(f["type"], dict) and "element-id" in f["type"]:
+            next_id += 1
+            nf["type"] = dict(f["type"], **{"element-id": next_id})
+        fields.append(nf)
     meta = dict(meta)
     new_schema = {"type": "struct", "schema-id": len(meta["schemas"]),
                   "fields": fields}
@@ -768,8 +784,8 @@ def _commit_snapshot(io: FsIO, table_dir: str, schema: T.StructType,
     """Append one snapshot: write the new manifest, a manifest-list that
     carries every prior snapshot's manifests plus the new one, and the next
     ``vN.metadata.json`` + ``version-hint.text``. Timestamps derive from the
-    version counter (deterministic — reproducible metadata for identical
-    inputs, and nothing here needs wall-clock)."""
+    version counter (nothing here needs wall-clock); the manifest files carry
+    a random per-attempt id in their names."""
     meta_dir = io.join("metadata")
     io.makedirs(meta_dir)
     try:
@@ -811,10 +827,16 @@ def _commit_snapshot(io: FsIO, table_dir: str, schema: T.StructType,
         part_fields = [(t.field, at)]
     mf_schema, me_schema = _manifest_schemas(part_fields)
 
-    man_name = f"m{seq}-{manifest_content}.avro"
+    # manifest and manifest-list names are unique per commit attempt (as
+    # Iceberg's own snap-{id}-{attempt}-{uuid}.avro): both are written
+    # BEFORE the exclusive vN claim below, so a racing loser that derived
+    # the same seq must never overwrite the files the winner's metadata
+    # points at
+    attempt = uuid.uuid4().hex
+    man_name = f"m{seq}-{manifest_content}-{attempt}.avro"
     man_path = posixpath.join(meta_dir, man_name)
     man_bytes = write_avro_container(None, me_schema, new_entries)
-    io.publish_bytes(man_path, man_bytes, attempt_tag=f"man{seq}")
+    io.publish_bytes(man_path, man_bytes, attempt_tag=attempt)
 
     rows = sum(e["data_file"]["record_count"] for e in new_entries)
     new_manifest = {
@@ -831,10 +853,10 @@ def _commit_snapshot(io: FsIO, table_dir: str, schema: T.StructType,
         {k: m[k] for k in (f["name"] for f in mf_schema["fields"])}
         for m in (prev_manifests if carry_prev else [])
     ] + [new_manifest]
-    ml_name = f"snap-{snap_id}.avro"
+    ml_name = f"snap-{snap_id}-{attempt}.avro"
     ml_path = posixpath.join(meta_dir, ml_name)
     io.publish_bytes(ml_path, write_avro_container(None, mf_schema, manifests),
-                     attempt_tag=f"ml{seq}")
+                     attempt_tag=attempt)
 
     snapshot = {
         "snapshot-id": snap_id, "sequence-number": seq,
@@ -845,15 +867,16 @@ def _commit_snapshot(io: FsIO, table_dir: str, schema: T.StructType,
         meta = _evolve_schema(meta, schema)
     if meta is None:
         import hashlib
+        schema_json = _iceberg_schema_json(schema)
         h = hashlib.md5(table_dir.encode()).hexdigest()
         table_uuid = f"{h[:8]}-{h[8:12]}-{h[12:16]}-{h[16:20]}-{h[20:32]}"
         meta = {
             "format-version": 2, "table-uuid": table_uuid,
             "location": table_dir, "last-sequence-number": seq,
             "last-updated-ms": ts,
-            "last-column-id": len(schema.fields),
+            "last-column-id": _max_column_id(schema_json["fields"]),
             "current-schema-id": 0,
-            "schemas": [_iceberg_schema_json(schema)],
+            "schemas": [schema_json],
             "default-spec-id": 0,
             "partition-specs": [{
                 "spec-id": 0,

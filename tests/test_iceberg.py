@@ -464,6 +464,75 @@ def test_concurrent_commit_fails_loudly(spark, tmp_path):
     assert read_iceberg(spark, d).count() == 100
 
 
+def test_racing_loser_never_overwrites_winner_manifest_list(spark, tmp_path):
+    """Two commits derive the same sequence number, and the loser writes its
+    manifest and manifest-list after the winner has claimed vN (injected
+    between the winner's claim and its version-hint update by wrapping
+    ``io.create_exclusive``, so no thread timing is involved). The loser
+    must fail loudly and leave the winner's manifest-list byte-identical:
+    manifest names are unique per commit attempt."""
+    from pandora_apache_avro_idl_to_apache_parquet_spark.sources.iceberg import (
+        equality_delete_iceberg,
+    )
+
+    d = str(tmp_path / "t")
+    write_iceberg(_docs(spark, n=100), d)
+    io = FsIO.resolve(d)
+    claim = io.create_exclusive
+    race = {}
+
+    def claim_then_race(path, data):
+        won = claim(path, data)
+        if won and not race:
+            ml = json.loads(data)["snapshots"][-1]["manifest-list"]
+            race["ml"], race["bytes"] = ml, io.read_bytes(ml)
+            try:  # the loser still reads v1 through the old version hint
+                equality_delete_iceberg(
+                    spark.range(50).select(F.col("id").alias("doc_id")), d)
+            except RuntimeError as e:
+                race["loser"] = str(e)
+        return won
+
+    io.create_exclusive = claim_then_race
+    append_iceberg(_docs(spark, n=10, shift=100), d, io=io)
+    assert "concurrent Iceberg commit" in race["loser"]
+    assert io.read_bytes(race["ml"]) == race["bytes"]
+    assert _rows(read_iceberg(spark, d)) == _rows(_docs(spark, n=110))
+
+
+def test_column_ids_unique_and_last_column_id_is_max(spark, tmp_path):
+    """List element ids are column ids too: ``last-column-id`` is the max of
+    all field and element ids, and columns added by evolution (a list
+    column's element included) are numbered after it."""
+
+    def column_ids(meta):
+        sch = next(s for s in meta["schemas"]
+                   if s["schema-id"] == meta["current-schema-id"])
+        return [f["id"] for f in sch["fields"]] + [
+            f["type"]["element-id"] for f in sch["fields"]
+            if isinstance(f["type"], dict)]
+
+    d = str(tmp_path / "t")
+    toks = spark.range(20).select(
+        F.col("id").cast("string").alias("doc_id"),
+        F.array(F.col("id").cast("int")).alias("tokens"),
+        F.lit(1).alias("n_tok"),
+        F.lit("s").alias("source"),
+    )
+    write_iceberg(toks, d)
+    meta = current_metadata(d)
+    assert sorted(column_ids(meta)) == [1, 2, 3, 4, 5]
+    assert meta["last-column-id"] == 5
+    append_iceberg(toks.withColumn("extra", F.col("n_tok").cast("long"))
+                   .withColumn("tags", F.array(F.lit(7))), d)
+    meta = current_metadata(d)
+    ids = column_ids(meta)
+    assert len(ids) == len(set(ids)) == 8
+    assert meta["last-column-id"] == max(ids)
+    got = read_iceberg(spark, d)
+    assert got.count() == 40 and got.filter(F.col("tags").isNull()).count() == 20
+
+
 def test_hidden_partition_transforms(spark, tmp_path):
     """Hidden partitioning: the table partitions by a TRANSFORM of a source
     column — days(ts), bucket(N, id), truncate(W, s) — the data files keep
